@@ -135,17 +135,26 @@ def _tree(root: int) -> list[int]:
     return out
 
 
-def tree_rss_mb(root: int) -> float:
-    """Combined RSS of `root` (the JVM) and all its descendants (the Python
-    worker daemon and its workers)."""
-    total = 0
+def descendants(root: int) -> list[int]:
+    """Every living or zombie process below `root`."""
+    return _tree(root)[1:]
+
+
+def tree_rss_mb(root: int) -> tuple[float, float]:
+    """RSS of `root` (the JVM) and combined RSS of all its descendants (the
+    Python worker daemon and its workers), in MB."""
+    own = workers = 0
     for pid in _tree(root):
         try:
             with open(f"/proc/{pid}/statm") as f:
-                total += int(f.read().split()[1])
+                pages = int(f.read().split()[1])
         except (OSError, IndexError, ValueError):
             continue
-    return total * _PAGE / 2**20
+        if pid == root:
+            own = pages
+        else:
+            workers += pages
+    return own * _PAGE / 2**20, workers * _PAGE / 2**20
 
 
 _TCK = os.sysconf("SC_CLK_TCK")
@@ -167,12 +176,13 @@ def tree_cpu_s(root: int) -> float:
 
 class RssSampler:
     """Samples `tree_rss_mb(pid)` every `interval` seconds while active;
-    `peak()` returns the maximum since the last `reset()`."""
+    `peak()` returns the maximum combined RSS since the last `reset()`, and
+    `peak_workers()` the maximum of the Python workers' share alone."""
 
     def __init__(self, pid: int, interval: float = 0.25):
         self.pid = pid
         self.interval = interval
-        self._peak = 0.0
+        self._peak = self._peak_workers = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
@@ -184,15 +194,26 @@ class RssSampler:
         self._stop.set()
         self._thread.join(timeout=5)
 
+    def _sample(self) -> None:
+        own, workers = tree_rss_mb(self.pid)
+        self._peak = max(self._peak, own + workers)
+        self._peak_workers = max(self._peak_workers, workers)
+
     def _loop(self) -> None:
         while not self._stop.wait(self.interval):
-            self._peak = max(self._peak, tree_rss_mb(self.pid))
+            self._sample()
 
     def reset(self) -> None:
-        self._peak = tree_rss_mb(self.pid)
+        self._peak = self._peak_workers = 0.0
+        self._sample()
 
     def peak(self) -> float:
-        return max(self._peak, tree_rss_mb(self.pid))
+        self._sample()
+        return self._peak
+
+    def peak_workers(self) -> float:
+        self._sample()
+        return self._peak_workers
 
 
 # -- host witness -------------------------------------------------------------

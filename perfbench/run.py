@@ -17,6 +17,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
+import subprocess
 import sys
 import time
 import traceback
@@ -27,10 +29,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
 N_SETUPS = 3
-MIN_STEADY = 2
 
 END_TO_END = {"setup_s": "s", "wall_s": "s", "rows_per_s": "1/s",
-              "peak_rss_mb": "MB"}
+              "worker_rss_mb": "MB"}
 FUSED_NAMES = ["AAC", "DPC_type_1", "CKSAAP_type_1", "GAAC", "CTDC", "CTDT",
                "CTDD", "PAAC"]
 PER_LAYER = {
@@ -74,6 +75,62 @@ def prepare_env() -> None:
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(WORK, "spark-local")
     os.environ["SPARK_GRAFT_CPUS"] = str(nproc())
     sys.path[:0] = [ROOT, HERE]
+
+
+def adopt_orphans() -> None:
+    """Make this process the subreaper of everything it starts: the Python
+    worker daemon can outlive the JVM that spawned it, and is then
+    re-parented here, where `stop_processes` waits for it."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def stop_processes(grace: float = 30.0) -> None:
+    """Stop Spark and its JVM, then wait until every process this run started
+    has ended; whatever is still alive after `grace` seconds is killed.
+    Safe to call more than once."""
+    if "pyspark" in sys.modules:
+        from pyspark import SparkContext
+
+        sc = SparkContext._active_spark_context
+        if sc is not None:
+            try:
+                sc.stop()
+            except Exception:  # a broken context must not keep the JVM up
+                traceback.print_exc()
+        gw, proc = SparkContext._gateway, None
+        if gw is not None:
+            SparkContext._gateway = SparkContext._jvm = None
+            proc = getattr(gw, "proc", None)
+            try:
+                gw.shutdown()
+            except Exception:
+                traceback.print_exc()
+        if proc is not None:
+            if proc.stdin:
+                proc.stdin.close()      # the gateway JVM exits on EOF
+            try:
+                proc.wait(grace)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+    deadline = time.monotonic() + grace
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return                      # no child left, adopted ones included
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for pid in obs.descendants(os.getpid()):
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.05)
 
 
 def new_session(master: str | None = None):
@@ -128,6 +185,7 @@ class Runner:
         rec["cpu_s"] = obs.tree_cpu_s(self.rss.pid) - cpu0
         rec["start"], rec["end"] = start, start + rec["seconds"]
         rec["peak_rss_mb"] = self.rss.peak()
+        rec["peak_worker_rss_mb"] = self.rss.peak_workers()
         rec["stages"] = self.ledger.collect(after_job=j0, group=group)
         return rec
 
@@ -158,8 +216,16 @@ def scaling(wl, runner, wall_s: float) -> dict:
             "local1_rows": rows, "local1_seconds": times}
 
 
-def traced(wl, runner, wall_s: float, setups: dict,
-           reps: int) -> tuple[dict, dict]:
+def steady_wall(runner) -> dict:
+    """Summary of the seconds of every steady pass that passed its checks."""
+    steady = [p["seconds"] for p in runner.passes
+              if p["label"] == "steady" and not p["errors"]]
+    if not steady:
+        raise RuntimeError("no steady pass succeeded")
+    return obs.summary(steady)
+
+
+def traced(wl, runner, setups: dict, reps: int) -> tuple[dict, dict]:
     """Time the workload's cumulative prefixes (median of `reps`), each
     under its own job group, and attribute each difference to the layer
     just added."""
@@ -182,6 +248,12 @@ def traced(wl, runner, wall_s: float, setups: dict,
                       "end": rec["end"], "job_group": rec["group"],
                       "stages": rec["stages"]})
     root["end"] = time.time()
+    # the chain ran on a JVM warmer than the plain passes before it: time the
+    # plain pass as often again after it, so that the layers are compared
+    # with a wall time taken on both sides of them
+    for _ in range(reps):
+        runner.measured_pass("steady")
+    wall_s = steady_wall(runner)["median"]
     t = {r["label"]: r["seconds"] for r in chain}
     self_s, prev = {}, 0.0
     for r in chain:
@@ -356,11 +428,11 @@ def main(argv: list[str] | None = None) -> int:
                 first["errors"] += wl.failures
                 wl.failures = []
             phase("deep_check")
-            # the second pass still pays JIT and worker warm-up: run it,
-            # check it, count it, but keep it out of wall_s
-            runner.measured_pass("warmup")
             reps = 1
             if args.trace:
+                # the second pass still pays JIT and worker warm-up: run it,
+                # check it, count it, but keep it out of wall_s
+                runner.measured_pass("warmup")
                 runner.measured_pass("steady")
                 if runner.passes[-1]["seconds"] < 3.0:   # short: median of 3
                     reps = 3
@@ -368,28 +440,29 @@ def main(argv: list[str] | None = None) -> int:
                         runner.measured_pass("steady")
             else:
                 # a fixed pass count keeps every run at the same point of
-                # the warm-up curve; --seconds is the least time measured
+                # the warm-up curve, and the median over it drops the passes
+                # a burst of host load slowed; --seconds is the least time
+                # measured
                 t0 = time.perf_counter()
                 while (sum(p["label"] == "steady" for p in runner.passes)
-                       < MIN_STEADY or time.perf_counter() - t0 < args.seconds):
+                       < wl.steady_passes
+                       or time.perf_counter() - t0 < args.seconds):
                     runner.measured_pass("steady")
             phase("steady")
-            steady = [p for p in runner.passes
-                      if p["label"] == "steady" and not p["errors"]]
-            if not steady:
-                raise RuntimeError("no steady pass succeeded")
-            wall = obs.summary([p["seconds"] for p in steady])
             if args.trace:
-                layer, ledger = traced(wl, runner, wall["median"], {
+                layer, ledger = traced(wl, runner, {
                     "start": obs.summary(starts)["median"],
                     "spawn": obs.summary(spawns)["median"]}, reps)
                 if wl.failures:
                     runner.passes.append({"label": "traced-checks",
                                           "errors": wl.failures})
-                if wl.name == "descriptor_scan":
-                    extra["scaling"] = scaling(wl, runner, wall["median"])
+            wall = steady_wall(runner)
+            steady = [p for p in runner.passes
+                      if p["label"] == "steady" and not p["errors"]]
+            if args.trace and wl.name == "descriptor_scan":
+                extra["scaling"] = scaling(wl, runner, wall["median"])
     finally:
-        (runner.spark if runner else spark).stop()
+        stop_processes()
     phase("stop")
     witness.update(loadavg_end=obs.loadavg(),
                    steal_s=obs.steal_seconds() - witness.pop("steal_s_start"),
@@ -406,9 +479,11 @@ def main(argv: list[str] | None = None) -> int:
         "setup_s": obs.summary(setup),
         "wall_s": wall,
         "rows_per_s": obs.summary([rows / p["seconds"] for p in steady]),
-        "peak_rss_mb": obs.summary([first["peak_rss_mb"]]),
+        "worker_rss_mb": obs.summary([p["peak_worker_rss_mb"]
+                                      for p in steady]),
     }
     shown = {k: (v["median"], END_TO_END[k], v) for k, v in result.items()}
+    shown["peak_rss_mb"] = (first["peak_rss_mb"], "MB", None)
     shown["first_pass_s"] = (first["seconds"], "s", None)
     cpu = obs.summary([p["cpu_s"] for p in steady])
     shown["cpu_s"] = (cpu["median"], "s", cpu)
@@ -466,4 +541,10 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    adopt_orphans()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
+    try:
+        code = main()
+    finally:
+        stop_processes()
+    sys.exit(code)

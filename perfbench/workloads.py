@@ -104,6 +104,7 @@ def kernel_probe(descs: list[str], tokens: pa.Array) -> dict[str, float]:
 
 class Workload:
     name = ""
+    steady_passes = 6       # untraced passes after the first, median taken
 
     def __init__(self, work: str, seed: int, size: str):
         self.seed = seed
@@ -423,6 +424,7 @@ class NearDedup(Workload):
     `near_dedup` adds is timed by the traced run (see `components`)."""
 
     name = "near_dedup"
+    steady_passes = 4
     shingle_n = 3
     ngram_t = 0.5
     stop_df = 200           # ngram_jaccard_pairs' max_shingle_freq default
