@@ -23,7 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ifeatureomega_cli_spark.functions.extract import extract, feature_names
+from ifeatureomega_cli_spark.functions.extract import (
+    _discover_length, extract, feature_names)
 from ifeatureomega_cli_spark.functions.registry import descriptor_names, get_spec
 from ifeatureomega_cli_spark import sinks
 
@@ -78,7 +79,7 @@ class SequenceDataset:
                       length: int = 0) -> list[str]:
         cfg = {**self._params.get(name, {}), **(params or {})}
         if not length and get_spec(f"{self.seq_type}:{name}").equal_length:
-            length = int(self.df.agg({"n_tok": "max"}).collect()[0][0])
+            length = _discover_length(self.df, "n_tok")
         return feature_names(f"{self.seq_type}:{name}", cfg or None, length)
 
     # -- sinks ----------------------------------------------------------

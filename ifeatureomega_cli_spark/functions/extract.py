@@ -1,9 +1,17 @@
 """`extract` — the engine's main descriptor entry point.
 
 ``extract(df, "protein:AAC")`` appends a ``features array<double>`` column
-computed by one Arrow-vectorized pandas UDF.  The plan stays fully
-declarative: Catalyst prunes the scan to (doc_id, tokens) and the only
+and ``extract_many(df, names)`` appends one such column per descriptor.
+Both go through ONE Arrow-native UDF builder (`_descriptor_udf`): the input
+column crosses the Arrow boundary once per batch, is decoded zero-copy into
+one shared ``Ragged``, every requested kernel runs over it, and the (n, dim)
+outputs go back as a struct of zero-copy list columns.  The plan stays fully
+declarative: Catalyst prunes the scan to the columns used and the only
 Python boundary is one ArrowEvalPython node streaming ~2048-row batches.
+`text_descriptors.char_descriptor` reuses the same builder with a string
+decoder.  A caller who wants one concatenated vector writes
+``F.concat(*cols)`` over `extract_many`'s columns (JVM-side, no extra
+Python pass).
 
 Equal-length descriptors need the dataset length L up front (their output
 dim depends on it); pass ``length=`` or let extract run one tiny agg job
@@ -13,13 +21,14 @@ agg run map-side-combined (it reduces to one long per partition).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql.types import (ArrayType, DoubleType, FloatType, StructField,
+                               StructType)
 
 from ifeatureomega_cli_spark.functions.kernels import Ragged
 from ifeatureomega_cli_spark.functions.registry import get_spec
@@ -33,8 +42,6 @@ def _list_array(matrix: np.ndarray, dtype: str = "float64"):
     """(n, dim) kernel output → pyarrow list array with ZERO per-row work:
     the flat values buffer is adopted as-is and the offsets are one arange
     (guide §4.2 — re-slice buffers instead of copying rows)."""
-    import pyarrow as pa
-
     n, dim = matrix.shape
     if dtype == "float32":
         matrix = matrix.astype(np.float32)
@@ -42,34 +49,35 @@ def _list_array(matrix: np.ndarray, dtype: str = "float64"):
     return pa.ListArray.from_arrays(offsets, pa.array(matrix.ravel()))
 
 
-def descriptor_udf(name: str, params: dict | None = None, length: int = 0,
-                   dtype: str = "float64"):
-    """Build the Arrow-native UDF column function for a descriptor.
+def _descriptor_udf(names: list[str], params: dict[str, dict] | None,
+                    length: int, dtype: str,
+                    decode: Callable[[pa.Array], Ragged] = Ragged.from_arrow):
+    """The ONE Arrow-native UDF that produces descriptor vectors.
 
-    Round 9: `arrow_udf` (Spark 4) instead of a pandas UDF — the plan node
-    is the same ArrowEvalPython with full column pruning, but both
-    boundaries are zero-copy: the token batch structure is read straight
-    from the Arrow list buffers (no per-row numpy objects, no per-row
-    concatenate) and the (n, dim) kernel output is re-sliced into a list
-    array via one offsets arange (guide §4.1/§4.2).
+    Returns a struct with one ``array<double|float>`` field per descriptor
+    (named by `_out_names`).  Per batch, `decode` turns the input Arrow
+    column into a ``Ragged`` once; every kernel shares it (and its memoized
+    gap-strip / row-id structure), and each (n, dim) output is re-sliced
+    into a list array zero-copy.
 
     ``dtype="float32"`` halves the feature bytes crossing the Python→JVM
     Arrow boundary and every downstream shuffle/sink.  Kernels always
     compute in float64 (golden parity unaffected); only the OUTPUT narrows
     (~1e-7 relative), the standard trade for ML feature pipelines at
     scale."""
-    import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.types import FloatType
 
-    spec = get_spec(name)
-    kern = spec.kernel(params, length)
+    kerns = [get_spec(n).kernel((params or {}).get(n), length) for n in names]
+    out_names = _out_names(names)
     elem = DoubleType() if dtype == "float64" else FloatType()
+    schema = StructType([
+        StructField(o, ArrayType(elem)) for o in out_names])
 
-    @arrow_udf(ArrayType(elem))
-    def _udf(tokens: pa.Array) -> pa.Array:
-        r = Ragged.from_arrow(tokens)
-        return _list_array(kern(r), dtype)
+    @arrow_udf(schema)
+    def _udf(col: pa.Array) -> pa.Array:
+        r = decode(col)
+        return pa.StructArray.from_arrays(
+            [_list_array(k(r), dtype) for k in kerns], names=out_names)
 
     return _udf
 
@@ -97,12 +105,11 @@ def extract(
     dtype: str = "float64",
 ) -> DataFrame:
     """Append `out_col: array<double|float>` with the descriptor vector."""
-    spec = get_spec(name)
     L = length or 0
-    if spec.equal_length and not L:
+    if get_spec(name).equal_length and not L:
         L = _discover_length(df, n_tok_col)
-    udf = descriptor_udf(name, params, L, dtype=dtype)
-    return df.withColumn(out_col, udf(F.col(tokens_col)))
+    udf = _descriptor_udf([name], {name: params}, L, dtype)
+    return df.withColumn(out_col, udf(F.col(tokens_col))[_out_names([name])[0]])
 
 
 def _out_names(names: list[str]) -> list[str]:
@@ -128,109 +135,20 @@ def extract_many(
     tokens_col: str = "tokens",
     length: int | None = None,
     dtype: str = "float64",
-    fuse: bool = True,
 ) -> DataFrame:
     """Several descriptors in one pass, one output column per descriptor.
 
-    fuse=True (default): ONE struct-returning Arrow UDF computes every
-    descriptor per batch — the Ragged batch structure (a Python-loop
-    int64 flatten of the tokens column) is built ONCE instead of once per
-    descriptor, and the tokens column crosses the Arrow boundary once.
-    With 10 descriptors that removes 9 redundant flatten passes — the
-    dominant per-batch memory traffic besides the kernels themselves.
-    fuse=False keeps the one-UDF-per-descriptor plan (Catalyst still
-    merges them into a single ArrowEvalPython node; each UDF rebuilds the
-    Ragged) — retained for A/B measurement and single-descriptor parity
-    with `extract`."""
+    ONE struct-returning Arrow UDF computes every descriptor per batch:
+    the tokens column crosses the Arrow boundary once and the Ragged batch
+    structure is built once, not once per descriptor."""
     if not names:
         return df
     out_names = _out_names(names)  # refuse collisions before any job runs
     L = length or 0
     if not L and any(get_spec(n).equal_length for n in names):
         L = _discover_length(df, "n_tok")  # ONE agg job shared by all
-    if fuse:
-        udf = fused_struct_udf(names, params, L, dtype=dtype)
-        packed = df.withColumn("__feats", udf(F.col(tokens_col)))
-        cols = [F.col(c) for c in df.columns] + [
-            F.col(f"__feats.{o}").alias(o) for o in out_names]
-        return packed.select(*cols)
-    cols: list[Column] = [F.col(c) for c in df.columns]
-    for name, out in zip(names, out_names):
-        p = (params or {}).get(name)
-        cols.append(descriptor_udf(name, p, L, dtype=dtype)(
-            F.col(tokens_col)).alias(out))
-    return df.select(*cols)
-
-
-def fused_struct_udf(names: list[str], params: dict[str, dict] | None = None,
-                     length: int = 0, dtype: str = "float64"):
-    """ONE Arrow-native UDF returning a struct with one array field per
-    descriptor: shared zero-copy Ragged build (plus memoized gap-strip /
-    row-id structure shared ACROSS kernels), zero-copy list outputs."""
-    import pyarrow as pa
-    from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.types import FloatType, StructField, StructType
-
-    kerns = [get_spec(n).kernel((params or {}).get(n), length) for n in names]
-    out_names = _out_names(names)
-    elem = DoubleType() if dtype == "float64" else FloatType()
-    schema = StructType([
-        StructField(o, ArrayType(elem)) for o in out_names])
-
-    @arrow_udf(schema)
-    def _udf(tokens: pa.Array) -> pa.Array:
-        r = Ragged.from_arrow(tokens)
-        return pa.StructArray.from_arrays(
-            [_list_array(k(r), dtype) for k in kerns], names=out_names)
-
-    return _udf
-
-
-def fused_udf(names: list[str], params: dict[str, dict] | None = None,
-              length: int = 0):
-    """ONE Arrow UDF computing several descriptors per batch: the Ragged
-    batch structure is built once and shared, and the output crosses the
-    Python→JVM boundary as a single concatenated array column (one Arrow
-    child array instead of one per descriptor)."""
-    kerns = [get_spec(n).kernel((params or {}).get(n), length) for n in names]
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def _udf(tokens: pd.Series) -> pd.Series:
-        r = Ragged.from_arrays(tokens.to_numpy())
-        out = np.concatenate([k(r) for k in kerns], axis=1)
-        return pd.Series(list(out))
-
-    return _udf
-
-
-def extract_fused(
-    df: DataFrame,
-    names: list[str],
-    params: dict[str, dict] | None = None,
-    tokens_col: str = "tokens",
-    out_col: str = "features",
-    length: int | None = None,
-) -> DataFrame:
-    """Fused multi-descriptor extraction → one `out_col array<double>`.
-
-    Use `fused_slices(names, ...)` to recover per-descriptor sub-vectors
-    (JVM-side `slice`, no extra Python pass)."""
-    L = length or 0
-    if not L and any(get_spec(n).equal_length for n in names):
-        L = _discover_length(df, "n_tok")
-    udf = fused_udf(names, params, L)
-    return df.withColumn(out_col, udf(F.col(tokens_col)))
-
-
-def fused_slices(names: list[str], params: dict[str, dict] | None = None,
-                 length: int = 0, out_col: str = "features") -> list[Column]:
-    """Column expressions slicing a fused vector back into per-descriptor
-    arrays, aliased by descriptor name."""
-    cols = []
-    start = 1
-    for n in names:
-        dim = len(get_spec(n).names((params or {}).get(n), length))
-        cols.append(F.slice(F.col(out_col), start, dim).alias(
-            n.split(":", 1)[-1].replace(" ", "_")))
-        start += dim
-    return cols
+    udf = _descriptor_udf(names, params, L, dtype)
+    packed = df.withColumn("__feats", udf(F.col(tokens_col)))
+    cols = [F.col(c) for c in df.columns] + [
+        F.col(f"__feats.{o}").alias(o) for o in out_names]
+    return packed.select(*cols)

@@ -60,24 +60,20 @@ class Ragged:
         Reads the list offsets and the flat child values directly from the
         Arrow buffers — no per-row Python objects, no per-row concatenate
         (guide §4.2: binary/list columns are one contiguous buffer plus an
-        offsets array).  Null rows become empty rows (zero-vector output)."""
+        offsets array).  Null rows become empty rows (zero-vector output)
+        through one mask over the flat values."""
         import pyarrow as pa
 
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
         offsets = arr.offsets.to_numpy()
         lengths = np.diff(offsets).astype(np.int64)
+        flat = arr.values.to_numpy(zero_copy_only=False)[
+            offsets[0]:offsets[-1]].astype(np.int64)
         if arr.null_count:
-            lengths[~arr.is_valid().to_numpy(zero_copy_only=False)] = 0
-            flat_parts = [
-                arr.values.to_numpy(zero_copy_only=False)[s:s + ln]
-                for s, ln in zip(offsets[:-1], lengths) if ln
-            ]
-            flat = (np.concatenate(flat_parts).astype(np.int64)
-                    if flat_parts else np.empty(0, dtype=np.int64))
-            return cls(flat, lengths)
-        values = arr.values.to_numpy(zero_copy_only=False)
-        flat = values[offsets[0]:offsets[-1]].astype(np.int64)
+            valid = arr.is_valid().to_numpy(zero_copy_only=False)
+            flat = flat[np.repeat(valid, lengths)]
+            lengths[~valid] = 0
         return cls(flat, lengths)
 
     def row_ids(self) -> np.ndarray:

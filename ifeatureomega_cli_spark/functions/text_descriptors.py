@@ -8,11 +8,12 @@ node over the pruned (id, text) scan; rows whose token stream is too short
 for the descriptor produce all-zero vectors (the kernels' safe-division),
 which downstream `freq > 0` filters drop exactly like the old pre-filter.
 
-Round 9: the UDF is Arrow-native (`arrow_udf`) and the tokenizer is fully
+The UDF is the engine's one descriptor UDF (`extract._descriptor_udf`)
+with `_tokens_from_strings` as its decoder.  The tokenizer is fully
 vectorized — one 256-entry byte LUT gather over the string column's flat
-UTF-8 buffer instead of a per-row Python loop (guide §4.2), and the kernel
-output is re-sliced into a list array zero-copy.  Case folding is in the
-LUT (both cases map to the same token id), so no per-row .upper() either.
+UTF-8 buffer instead of a per-row Python loop (guide §4.2), nulls
+included.  Case folding is in the LUT (both cases map to the same token
+id), so no per-row .upper() either.
 Semantics match the old path for ASCII text (any byte outside the 20-AA
 alphabet is dropped, as the old `ids[ids < 20]` filter did); non-ASCII
 bytes are dropped too, where the old path raised.
@@ -25,9 +26,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ifeatureomega_cli_spark.functions.extract import _list_array
+from ifeatureomega_cli_spark.functions.extract import (_descriptor_udf,
+                                                       _out_names)
 from ifeatureomega_cli_spark.functions.kernels import Ragged
-from ifeatureomega_cli_spark.functions.registry import get_spec
 from ifeatureomega_cli_spark.tokenize import PROTEIN_AA
 
 _LUT256 = np.full(256, -1, dtype=np.int8)
@@ -37,59 +38,32 @@ for _i, _c in enumerate(PROTEIN_AA):
 
 
 def _tokens_from_strings(arr) -> Ragged:
-    """Arrow StringArray → gap-filtered protein-token Ragged, vectorized."""
-    import pyarrow as pa
-
+    """Arrow string / large_string array → gap-filtered protein-token
+    Ragged, vectorized.  Null rows become empty rows through one mask over
+    the flat bytes."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    if pa.types.is_large_string(arr.type):
-        arr = arr.cast(pa.string())
     n = len(arr)
-    # StringArray exposes no .offsets property — read the int32 offsets
-    # buffer directly (window it by arr.offset for sliced arrays)
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+    if n == 0:  # a zero-length array may carry no offsets buffer
+        return Ragged(np.empty(0, np.int64), np.empty(0, np.int64))
+    # string arrays expose no .offsets property — read the offsets buffer
+    # directly (int64 for large_string; window it by arr.offset for sliced
+    # arrays)
+    otype = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offsets = np.frombuffer(arr.buffers()[1], dtype=otype)[
         arr.offset:arr.offset + n + 1]
     char_lens = np.diff(offsets)
-    if arr.null_count:
-        char_lens = np.where(
-            arr.is_valid().to_numpy(zero_copy_only=False), char_lens, 0)
-        ids_rows = []
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8) \
-            if arr.buffers()[2] is not None else np.empty(0, np.uint8)
-        for s, ln in zip(offsets[:-1], char_lens):
-            b = data[s:s + ln]
-            t = _LUT256[b]
-            ids_rows.append(t[t >= 0])
-        lengths = np.array([len(x) for x in ids_rows], dtype=np.int64)
-        flat = (np.concatenate(ids_rows).astype(np.int64)
-                if ids_rows else np.empty(0, np.int64))
-        return Ragged(flat, lengths)
     buf = arr.buffers()[2]
     data = (np.frombuffer(buf, dtype=np.uint8) if buf is not None
             else np.empty(0, np.uint8))
-    flat_bytes = data[offsets[0]:offsets[-1]]
-    ids = _LUT256[flat_bytes]
+    ids = _LUT256[data[offsets[0]:offsets[-1]]]
     rid = np.repeat(np.arange(n), char_lens)
     keep = ids >= 0
+    if arr.null_count:
+        keep &= np.repeat(arr.is_valid().to_numpy(zero_copy_only=False),
+                          char_lens)
     lengths = np.bincount(rid[keep], minlength=n).astype(np.int64)
     return Ragged(ids[keep].astype(np.int64), lengths)
-
-
-def char_descriptor_udf(name: str, params: dict | None = None,
-                        length: int = 0):
-    """Fused vectorized-tokenize + descriptor kernel as ONE Arrow UDF."""
-    import pyarrow as pa
-    from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    kern = get_spec(name).kernel(params, length)
-
-    @arrow_udf(ArrayType(DoubleType()))
-    def _udf(texts: pa.Array) -> pa.Array:
-        r = _tokens_from_strings(texts)
-        return _list_array(kern(r))
-
-    return _udf
 
 
 def char_descriptor(
@@ -99,6 +73,8 @@ def char_descriptor(
     out_col: str = "features",
     params: dict | None = None,
 ) -> DataFrame:
-    """Append `out_col array<double>` computed straight from `text_col`."""
-    return df.withColumn(out_col,
-                         char_descriptor_udf(name, params)(F.col(text_col)))
+    """Append `out_col array<double>` computed straight from `text_col`:
+    the shared descriptor UDF with the vectorized tokenizer as decoder."""
+    udf = _descriptor_udf([name], {name: params}, 0, "float64",
+                          _tokens_from_strings)
+    return df.withColumn(out_col, udf(F.col(text_col))[_out_names([name])[0]])

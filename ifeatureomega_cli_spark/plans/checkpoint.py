@@ -74,17 +74,14 @@ class CheckpointedRun:
         bucketed = bucket_by(source, self.key, self.n_buckets)
         total_rows = 0
         t_all = time.time()
-        for w in range(0, len(pending), max(1, len(pending) // self.waves or 1)):
-            wave = pending[w: w + max(1, len(pending) // self.waves or 1)]
-            if not wave:
-                continue
+        step = max(1, len(pending) // self.waves)
+        for w in range(0, len(pending), step):
+            wave = pending[w: w + step]
             t0 = time.time()
             part = bucketed.filter(F.col("bucket").isin(wave))
-            out = transform(part)
-            if "bucket" not in out.columns:
-                out = out.join(
-                    bucketed.select(self.key, "bucket").distinct(), self.key
-                )
+            # re-derive the bucket from the key (a map-side projection, no
+            # shuffle) whether or not the transform kept the column
+            out = bucket_by(transform(part), self.key, self.n_buckets)
             # per-write dynamic overwrite (only the wave's bucket partitions
             # are replaced) — set on the writer, NOT the shared session conf,
             # so unrelated writes in the session keep their own semantics

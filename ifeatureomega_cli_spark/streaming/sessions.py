@@ -47,8 +47,16 @@ def streaming_session_stats(
 
 def streaming_extract(stream_df: DataFrame, descriptor: str,
                       length: int = 0) -> DataFrame:
-    """Apply a descriptor kernel to a token stream (append mode)."""
-    from ifeatureomega_cli_spark.functions.extract import descriptor_udf
+    """Apply a descriptor kernel to a token stream (append mode).
 
-    udf = descriptor_udf(descriptor, length=length)
-    return stream_df.withColumn("features", udf(F.col("tokens")))
+    An equal-length descriptor needs `length`: a stream cannot run the
+    batch path's `max(n_tok)` discovery job, and without it the kernel's
+    output width would follow each micro-batch."""
+    from ifeatureomega_cli_spark.functions.extract import extract
+    from ifeatureomega_cli_spark.functions.registry import get_spec
+
+    if get_spec(descriptor).equal_length and not length:
+        raise ValueError(
+            f"{descriptor!r} is an equal-length descriptor: pass length= "
+            "(the fixed token count) to stream it")
+    return extract(stream_df, descriptor, length=length)

@@ -121,17 +121,24 @@ def test_dna_param_variant_matches_reference(spark, desc, params):
 
 
 def test_extract_fused_equals_separate(spark):
-    from ifeatureomega_cli_spark.functions.extract import (
-        extract_fused, extract_many, fused_slices)
+    """One concatenated vector is `F.concat` over extract_many's columns
+    (JVM-side, no second Python pass): it must equal the per-descriptor
+    vectors laid end to end."""
+    from pyspark.sql import functions as F
+
+    from ifeatureomega_cli_spark.functions.extract import extract_many
 
     names = ["protein:AAC", "protein:GAAC", "protein:CTDT"]
+    outs = ["AAC", "GAAC", "CTDT"]
     sdf = spark.read.parquet(os.path.join(FIXDIR, "peptide_tokens.parquet")).limit(50)
-    a = extract_many(sdf, names).select("doc_id", "AAC", "GAAC", "CTDT")\
-        .toPandas().set_index("doc_id")
-    b = extract_fused(sdf, names).select("doc_id", *fused_slices(names))\
-        .toPandas().set_index("doc_id").loc[a.index]
-    for c in ("AAC", "GAAC", "CTDT"):
-        assert np.allclose(np.array(a[c].tolist()), np.array(b[c].tolist()))
+    many = extract_many(sdf, names)
+    a = many.select("doc_id", *outs).toPandas().set_index("doc_id")
+    b = (many.select("doc_id", F.concat(*outs).alias("features"))
+         .toPandas().set_index("doc_id").loc[a.index])
+    sep = np.hstack([np.array(a[c].tolist()) for c in outs])
+    got = np.array(b["features"].tolist())
+    assert got.shape == (len(a), 20 + 5 + 39)
+    assert np.array_equal(got, sep)
 
 
 RNA_VARIANTS = [
@@ -177,11 +184,11 @@ def test_extract_float32_output(spark):
 
 
 def test_extract_many_struct_fuse_bit_identical(spark):
-    """The round-4 default (one struct-returning Arrow UDF, shared Ragged)
-    must be BIT-identical to the per-descriptor UDF path across the
-    kernel archetypes — composition, gapped pairs, autocorrelation,
-    CTD, pseudo-composition, positional (equal-length), cross-alphabet."""
-    from ifeatureomega_cli_spark.functions.extract import extract_many
+    """extract_many (one struct-returning Arrow UDF, shared Ragged) must be
+    BIT-identical to one `extract` call per descriptor across the kernel
+    archetypes — composition, gapped pairs, autocorrelation, CTD,
+    pseudo-composition, positional (equal-length), cross-alphabet."""
+    from ifeatureomega_cli_spark.functions.extract import extract, extract_many
 
     names = ["protein:AAC", "protein:DPC type 1", "protein:CKSAAP type 1",
              "protein:GAAC", "protein:CKSAAGP type 1", "protein:Moran",
@@ -191,11 +198,11 @@ def test_extract_many_struct_fuse_bit_identical(spark):
     outs = [n.split(":", 1)[-1].replace(" ", "_") for n in names]
     sdf = spark.read.parquet(
         os.path.join(FIXDIR, "peptide_tokens.parquet")).limit(60)
-    a = (extract_many(sdf, names, fuse=True).select("doc_id", *outs)
+    a = (extract_many(sdf, names).select("doc_id", *outs)
          .toPandas().set_index("doc_id").sort_index())
-    b = (extract_many(sdf, names, fuse=False).select("doc_id", *outs)
-         .toPandas().set_index("doc_id").sort_index())
-    for c in outs:
+    for name, c in zip(names, outs):
+        b = (extract(sdf, name, out_col=c).select("doc_id", c)
+             .toPandas().set_index("doc_id").sort_index())
         av = np.array(a[c].tolist())
         bv = np.array(b[c].tolist())
         assert av.shape == bv.shape and np.array_equal(
@@ -204,6 +211,25 @@ def test_extract_many_struct_fuse_bit_identical(spark):
     f32 = (extract_many(sdf, names[:3], dtype="float32").select(outs[0])
            .toPandas())
     assert np.asarray(f32.iloc[0, 0]).dtype == np.float32
+
+
+def test_feature_names_refuses_varying_length(spark):
+    """SequenceDataset.feature_names discovers an equal-length descriptor's
+    L exactly as `extract` does: a varying-length table is refused, not
+    named after its longest row."""
+    from ifeatureomega_cli_spark.api import SequenceDataset
+
+    df = spark.createDataFrame(
+        [(0, [0, 1, 2], 3), (1, [3, 4], 2)],
+        "doc_id long, tokens array<bigint>, n_tok int")
+    ds = SequenceDataset(spark, df)
+    with pytest.raises(ValueError, match="varying n_tok"):
+        ds.feature_names("binary")
+    assert len(ds.feature_names("binary", length=3)) == 3 * 20
+    same = SequenceDataset(spark, df.filter("n_tok = 3"))
+    assert same.feature_names("binary") == ds.feature_names("binary",
+                                                            length=3)
+    assert len(ds.feature_names("AAC")) == 20  # no length needed
 
 
 def test_ligand_dataset_facade(spark, tmp_path):

@@ -47,6 +47,33 @@ def test_checkpoint_resume(spark, tmp_path):
     assert run3.read().select("doc_id").distinct().count() == 60
 
 
+def test_checkpoint_bucket_kept_or_dropped_same_output(spark, tmp_path):
+    """The run re-derives `bucket` from the key, so a transform that drops
+    the column and one that keeps it write the same data and record the
+    same manifest."""
+    src = sequences(spark, 60).cache()
+    keep = lambda df: extract(df, "protein:AAC").select(
+        "doc_id", "bucket", "features")
+    drop = lambda df: extract(df, "protein:AAC").select("doc_id", "features")
+    data, manifests = [], []
+    for name, transform in (("keep", keep), ("drop", drop)):
+        run = CheckpointedRun(spark, str(tmp_path / name), n_buckets=8,
+                              waves=3)
+        m = run.run(src, transform)
+        assert m["buckets_processed"] == 8 and m["rows"] == 60
+        data.append(sorted(
+            (r["doc_id"], r["bucket"], tuple(r["features"]))
+            for r in run.read().select("doc_id", "bucket", "features")
+            .collect()))
+        manifests.append(sorted(
+            (r["bucket"], r["n_rows"]) for r in
+            spark.read.parquet(run.manifest_dir).collect()))
+    assert data[0] == data[1] and len(data[0]) == 60
+    assert manifests[0] == manifests[1]
+    assert [b for b, _ in manifests[0]] == list(range(8))
+    assert sum(n for _, n in manifests[0]) == 60
+
+
 def test_two_phase_count_matches_plain(spark):
     src = sequences(spark, 200)
     plain = {r["source"]: r["count"] for r in

@@ -160,16 +160,140 @@ def test_salt_id_cols_spreads_duplicates(spark):
 def test_extract_many_duplicate_out_names_rejected(spark):
     """ADVICE r4: 'protein:AAC' and 'dna:AAC' both normalize to column
     'AAC'; the fused struct would silently keep only the last kernel's
-    values.  Both the fused and per-UDF paths must refuse up front."""
+    values.  extract_many must refuse up front."""
     import pytest
 
     from ifeatureomega_cli_spark.functions.extract import extract_many
 
     df = spark.createDataFrame([(0, ["A", "C"], 2)],
                                "doc_id long, tokens array<string>, n_tok int")
-    for fuse in (True, False):
-        with pytest.raises(ValueError, match="duplicate output column"):
-            extract_many(df, ["protein:ASDC", "dna:ASDC"], fuse=fuse)
+    with pytest.raises(ValueError, match="duplicate output column"):
+        extract_many(df, ["protein:ASDC", "dna:ASDC"])
     # distinct normalized names still fine
     out = extract_many(df, ["protein:AAC", "protein:GAAC"])
     assert {"AAC", "GAAC"} <= set(out.columns)
+
+
+def _aac(r):
+    from ifeatureomega_cli_spark.functions.registry import get_spec
+
+    return get_spec("protein:AAC").kernel(None, 0)(r)
+
+
+def _with_null_spans(rows, filler):
+    """Offsets, flat values and validity for `rows` where every null row
+    still spans `filler` values — Arrow allows it, and the decoders must
+    drop them, not hand them to the next row."""
+    lens = [len(filler) if r is None else len(r) for r in rows]
+    offsets = np.concatenate(([0], np.cumsum(lens)))
+    flat = [v for r in rows for v in (filler if r is None else r)]
+    return offsets, flat, [r is not None for r in rows]
+
+
+def test_token_decoder_sliced_batch_with_nulls():
+    """Ragged.from_arrow on a sliced list batch whose null rows span
+    values: each null row is an empty row and every other row keeps
+    exactly its own tokens."""
+    import pyarrow as pa
+
+    from ifeatureomega_cli_spark.functions.kernels import Ragged
+
+    rows = [[0, 1, 2], None, [3, 3], [], None, [4, 5, 6, 7], [8], None]
+    offsets, flat, valid = _with_null_spans(rows, [19, 18])
+    mask = pa.array([not v for v in valid])
+    arrays = (
+        pa.array(rows, pa.list_(pa.int64())),
+        pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)),
+                                 pa.array(flat, pa.int64()), mask=mask),
+        pa.LargeListArray.from_arrays(pa.array(offsets),
+                                      pa.array(flat, pa.int32()), mask=mask),
+    )
+    for arr in arrays:
+        for start, stop in ((0, 8), (1, 7), (2, 6), (4, 5), (3, 3)):
+            part = rows[start:stop]
+            r = Ragged.from_arrow(arr.slice(start, stop - start))
+            exp = [x or [] for x in part]
+            assert r.n == len(part)
+            assert r.lengths.tolist() == [len(x) for x in exp]
+            assert r.flat.tolist() == [t for x in exp for t in x]
+            assert r.flat.dtype == np.int64
+
+
+def test_text_decoder_sliced_batch_with_nulls_and_large_string():
+    """_tokens_from_strings on string and large_string batches, sliced,
+    with null rows (spanning bytes or not) and empty batches: same tokens
+    as a per-row reference, and a large_string column gives the same
+    vectors as a string column."""
+    import pyarrow as pa
+
+    from ifeatureomega_cli_spark.functions.text_descriptors import (
+        _LUT256, _tokens_from_strings)
+
+    rows = ["ACDx-y", None, "", "mkwéQQ", None, "GGGG", "zz", None]
+    enc = [None if s is None else list(s.encode()) for s in rows]
+    offsets, flat, valid = _with_null_spans(enc, list(b"KKR"))
+    validity = pa.array(valid).buffers()[1]
+
+    def ref(s):
+        t = _LUT256[np.frombuffer(s.encode(), np.uint8)] if s else []
+        return [int(x) for x in t if x >= 0]
+
+    def spanning(typ, otype):
+        return pa.Array.from_buffers(typ, len(rows), [
+            validity, pa.py_buffer(offsets.astype(otype).tobytes()),
+            pa.py_buffer(bytes(flat))])
+
+    arrays = {pa.string(): [pa.array(rows, pa.string()),
+                            spanning(pa.string(), np.int32)],
+              pa.large_string(): [pa.array(rows, pa.large_string()),
+                                  spanning(pa.large_string(), np.int64)]}
+    for start, stop in ((0, 8), (1, 7), (2, 6), (4, 5), (3, 3)):
+        part = rows[start:stop]
+        exp = [ref(s) for s in part]
+        vecs = {}
+        for typ, arrs in arrays.items():
+            for arr in arrs:
+                r = _tokens_from_strings(arr.slice(start, stop - start))
+                assert r.lengths.tolist() == [len(x) for x in exp], typ
+                assert r.flat.tolist() == [t for x in exp for t in x], typ
+                vecs[typ] = _aac(r)
+        assert vecs[pa.string()].shape == (len(part), 20)
+        assert np.array_equal(vecs[pa.string()], vecs[pa.large_string()])
+    # a zero-length array may carry no offsets buffer
+    assert _tokens_from_strings(pa.Array.from_buffers(
+        pa.string(), 0, [None, None, pa.py_buffer(b"")])).n == 0
+    assert _tokens_from_strings(pa.array([], pa.large_string())).n == 0
+    assert _tokens_from_strings(
+        pa.chunked_array([pa.array(rows[:3]), pa.array(rows[3:])])
+    ).n == len(rows)
+
+
+def test_null_rows_give_zero_vectors_through_spark(spark):
+    """A null tokens row and a null text row come out as all-zero vectors,
+    with the large_string Arrow transfer on and off."""
+    from ifeatureomega_cli_spark.functions.extract import extract
+    from ifeatureomega_cli_spark.functions.text_descriptors import (
+        char_descriptor)
+
+    toks = spark.createDataFrame(
+        [(0, [0, 1, 1]), (1, None), (2, [19])],
+        "doc_id long, tokens array<bigint>")
+    got = {r["doc_id"]: r["features"] for r in
+           extract(toks, "protein:AAC").collect()}
+    assert got[1] == [0.0] * 20
+    assert got[0][1] == pytest.approx(2 / 3) and got[2][19] == 1.0
+    texts = spark.createDataFrame(
+        [(0, "ACC"), (1, None), (2, "xz-")], "doc_id long, text string")
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    prev = spark.conf.get(key, "false")
+    outs = []
+    try:
+        for flag in ("false", "true"):
+            spark.conf.set(key, flag)
+            outs.append({r["doc_id"]: r["features"] for r in
+                         char_descriptor(texts, "protein:AAC").collect()})
+    finally:
+        spark.conf.set(key, prev)
+    assert outs[0] == outs[1]
+    assert outs[0][1] == [0.0] * 20 == outs[0][2]
+    assert outs[0][0] == got[0]

@@ -49,19 +49,36 @@ def test_asof_one_exchange_one_sort(spark):
     assert plan.count("PushedFilters: [IsNotNull(event_type), EqualTo(event_type,purchase)]") == 1, plan
 
 
-def test_extract_one_arrow_pass_pruned_scan(spark):
-    """Descriptor extraction = ONE ArrowEvalPython node, scan pruned to
-    (doc_id, tokens), zero shuffles."""
-    from ifeatureomega_cli_spark.functions.extract import extract
-
-    df = spark.read.parquet(f"{FIXDIR}/peptide_tokens.parquet")
-    plan = _plan(extract(df, "protein:AAC").select("doc_id", "features"))
+def _one_arrow_pass_pruned(plan: str, cols: set[str]) -> None:
     assert _nodes(plan, "ArrowEvalPython") == 1, plan
     assert _nodes(plan, "Exchange") == 0, plan
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan
-    cols = {c.split(":")[0] for c in m.group(1).split(",") if ":" in c}
-    assert cols == {"doc_id", "tokens"}, cols
+    got = {c.split(":")[0] for c in m.group(1).split(",") if ":" in c}
+    assert got == cols, got
+
+
+def test_extract_one_arrow_pass_pruned_scan(spark):
+    """Descriptor extraction = ONE ArrowEvalPython node, scan pruned to
+    (doc_id, tokens), zero shuffles — for `extract`, for `extract_many` and
+    for `char_descriptor` over a (doc_id, text) scan."""
+    from ifeatureomega_cli_spark.functions.extract import extract, extract_many
+    from ifeatureomega_cli_spark.functions.text_descriptors import (
+        char_descriptor)
+
+    df = spark.read.parquet(f"{FIXDIR}/peptide_tokens.parquet")
+    _one_arrow_pass_pruned(
+        _plan(extract(df, "protein:AAC").select("doc_id", "features")),
+        {"doc_id", "tokens"})
+    many = extract_many(df, ["protein:AAC", "protein:GAAC", "protein:CTDC"])
+    _one_arrow_pass_pruned(
+        _plan(many.select("doc_id", "AAC", "GAAC", "CTDC")),
+        {"doc_id", "tokens"})
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    _one_arrow_pass_pruned(
+        _plan(char_descriptor(docs, "protein:AAC").select("doc_id",
+                                                          "features")),
+        {"doc_id", "text"})
 
 
 def test_pstnp_transform_no_shuffle(spark):

@@ -34,6 +34,32 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
                        np.array(exp["features"].tolist()))
 
 
+def test_streaming_extract_equal_length_needs_length(spark, tmp_path):
+    """An equal-length descriptor on a stream must be given `length`: the
+    width cannot be discovered per micro-batch."""
+    import pytest
+
+    from ifeatureomega_cli_spark.functions.extract import feature_names
+    from ifeatureomega_cli_spark.streaming.sessions import streaming_extract
+
+    src = spark.read.parquet(os.path.join(FIXDIR, "peptide_tokens.parquet"))
+    in_dir = str(tmp_path / "stream_in")
+    src.select("doc_id", "tokens").write.parquet(in_dir)
+    stream = spark.readStream.schema(
+        spark.read.parquet(in_dir).schema).parquet(in_dir)
+    with pytest.raises(ValueError, match="length"):
+        streaming_extract(stream, "protein:binary")
+    out = streaming_extract(stream, "protein:binary", length=31)
+    q = (out.writeStream.format("memory").queryName("feat_binary")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    widths = {len(r["features"]) for r in
+              spark.sql("select features from feat_binary").collect()}
+    assert widths == {len(feature_names("protein:binary", length=31))}
+
+
 def test_streaming_asof_enrich_matches_batch(spark, tmp_path):
     """Streaming point-in-time enrichment (SCD2 stream-static range join)
     must reproduce the batch as-of join byte-identically on closed input —
