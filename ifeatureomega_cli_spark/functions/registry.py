@@ -466,49 +466,36 @@ register(
 from ifeatureomega_cli_spark.functions import lookups as LK  # noqa: E402
 
 
-def _register_a2(
-    name: str,
-    seq_type: str,
-    names_fn,
-    ref: str,
-    grams: int = 1,
-    prop_major: bool = False,
-    table_key: str | None = None,
-    invalid_fill: float = 0.0,
-):
+def _gram_lookup(r: Ragged, vocab: int, k: int, table: np.ndarray,
+                 fill: float = 0.0, prop_major: bool = False) -> np.ndarray:
+    """Equal-length k-gram positional lookup: table[gram id] at each of the
+    L-k+1 starts, `fill` where the gram holds a gap/unknown token.
+    prop_major lays the values out property-major across positions (DPCP2/
+    TPCP2 replicate the reference's header/value layout mismatch, ref
+    :5069/:5081)."""
+    m = r.to_matrix()
+    ids, ok = K.positional_gram_ids(m, vocab, k)
+    g = np.where(ok[..., None], table[ids], fill)
+    if prop_major:
+        g = g.transpose(0, 2, 1)
+    return g.reshape(m.shape[0], -1)
+
+
+def _register_a2(name: str, seq_type: str, names_fn, ref: str, grams: int = 1,
+                 invalid_fill: float = 0.0):
     """Register a positional-lookup descriptor backed by a probed table.
 
     grams>1: the lookup key is the k-gram id at each position (L-k+1 blocks).
-    prop_major: values laid out property-major across positions (DPCP2/TPCP2
-    replicate the reference's header/value layout mismatch, ref :5069/:5081).
     """
 
     def mk_kernel(cfg, L):
-        table = LK.a2_table(seq_type if seq_type != "rna" else "dna", table_key or name, grams)
+        table = LK.a2_table(seq_type, name, grams)
+        vocab = 4 if seq_type == "dna" else 20
 
         def kern(r: Ragged):
             if grams == 1:
-                out = K.positional_lookup(r, table)
-                if prop_major:
-                    n = r.n
-                    D = table.shape[1]
-                    out = out.reshape(n, -1, D).transpose(0, 2, 1).reshape(n, -1)
-                return out
-            # k-gram positional lookup: compute gram ids then gather
-            m = r.to_matrix()
-            vocab = 4 if seq_type in ("dna", "rna") else 20
-            gap = vocab  # gap/unknown sentinel
-            ids = np.zeros((m.shape[0], m.shape[1] - grams + 1), dtype=np.int64)
-            ok = np.ones_like(ids, dtype=bool)
-            for j in range(grams):
-                t = m[:, j : m.shape[1] - grams + 1 + j]
-                ok &= t < vocab
-                ids = ids * vocab + np.where(t < vocab, t, 0)
-            gathered = table[ids]  # (n, L-k+1, D)
-            gathered = np.where(ok[..., None], gathered, invalid_fill)
-            if prop_major:
-                gathered = gathered.transpose(0, 2, 1)
-            return gathered.reshape(m.shape[0], -1)
+                return K.positional_lookup(r, table)
+            return _gram_lookup(r, vocab, grams, table, invalid_fill)
 
         return kern
 
@@ -613,61 +600,50 @@ _register_a2("DBE", "dna",
              lambda cfg, L: [f"DBE_{i}" for i in range(1, 4 * (L - 1) + 1)],
              "iFeatureOmegaCLI.py:4890-4936", grams=2, invalid_fill=0.5)
 
+# Nucleotide property tables: (phyche resource, cfg key, default selection).
+# iRNA's property descriptors are iDNA's with the dirnaPhyche table swapped
+# in, so every property builder takes the sequence type at registration and
+# reads its table from here.
 _DI_DNA_DEFAULT = "Twist;Tilt;Roll;Shift;Slide;Rise"  # parameters/DNA_parameters_setting.json
+_DI_RNA_DEFAULT = ("Rise (RNA);Roll (RNA);Shift (RNA);Slide (RNA);"
+                   "Tilt (RNA);Twist (RNA)")
+_TRI_DNA_DEFAULT = "Dnase I;Bendability (DNAse)"
+_DI_PROPS = {"dna": ("didnaPhyche", "Di-DNA-Phychem", _DI_DNA_DEFAULT),
+             "rna": ("dirnaPhyche", "Di-RNA-Phychem", _DI_RNA_DEFAULT)}
+_TRI_PROPS = ("tridnaPhyche", "Tri-DNA-Phychem", _TRI_DNA_DEFAULT)  # DNA only
 
 
-def _dpcp2_names(cfg, L):
-    props = cfg["Di-DNA-Phychem"].split(";")
-    return [f"DPCP2_{p}_pos{i}" for i in range(1, L) for p in props]
+def _props(seq_type: str, k: int):
+    """(phyche resource, cfg key, default) of the k-nucleotide properties."""
+    return _DI_PROPS[seq_type] if k == 2 else _TRI_PROPS
 
 
-def _mk_pcp2_dna(fname: str, cfg_key: str, grams: int):
-    """DPCP/TPCP type2 kernels that HONOR the property selection (ref
-    :5042-5092 / :5150-5196 iterate the user's property_name list) — the
-    round-3 registry arity audit caught the previous probed-table version
-    ignoring the cfg like the AAIndex bug.  Gap-containing k-grams → 0."""
+def _register_pcp2(seq_type: str, name: str, tag: str, k: int, ref: str):
+    """DPCP/TPCP type2: per-position property values of each k-gram,
+    property-major.  HONORS the property selection (ref :5042-5092 /
+    :5150-5196 iterate the user's property_name list) — the round-3
+    registry arity audit caught the previous probed-table version ignoring
+    the cfg like the AAIndex bug.  Gap-containing k-grams → 0."""
+    fname, key, default = _props(seq_type, k)
 
-    def mk(cfg, L):
-        _, v = _phyche(fname, cfg[cfg_key].split(";"))
-        table = v.T  # (4^grams, P)
+    def mk_names(cfg, L):
+        return [f"{tag}_{p}_pos{i}" for i in range(1, L - k + 2)
+                for p in cfg[key].split(";")]
+
+    def mk_kernel(cfg, L):
+        table = _phyche(fname, cfg[key].split(";"))[1].T  # (4^k, P)
 
         def kern(r: Ragged):
-            m = r.to_matrix()
-            W = m.shape[1] - grams + 1
-            ids = np.zeros((m.shape[0], W), dtype=np.int64)
-            ok = np.ones_like(ids, dtype=bool)
-            for j in range(grams):
-                t = m[:, j: W + j]
-                ok &= t < 4
-                ids = ids * 4 + np.where(t < 4, t, 0)
-            g = table[ids]
-            g = np.where(ok[..., None], g, 0.0)
-            return g.transpose(0, 2, 1).reshape(m.shape[0], -1)  # prop-major
+            return _gram_lookup(r, 4, k, table, prop_major=True)
 
         return kern
 
-    return mk
+    register(DescriptorSpec(name, seq_type, mk_names, mk_kernel, equal_length=True,
+                            defaults={key: default}, ref=ref))
 
 
-register(DescriptorSpec(
-    "DPCP type2", "dna", _dpcp2_names,
-    _mk_pcp2_dna("didnaPhyche", "Di-DNA-Phychem", 2), equal_length=True,
-    defaults={"Di-DNA-Phychem": _DI_DNA_DEFAULT},
-    ref="iFeatureOmegaCLI.py:5042-5092",
-))
-
-
-def _tpcp2_names(cfg, L):
-    props = cfg["Tri-DNA-Phychem"].split(";")
-    return [f"TPCP2_{p}_pos{i}" for i in range(1, L - 1) for p in props]
-
-
-register(DescriptorSpec(
-    "TPCP type2", "dna", _tpcp2_names,
-    _mk_pcp2_dna("tridnaPhyche", "Tri-DNA-Phychem", 3), equal_length=True,
-    defaults={"Tri-DNA-Phychem": "Dnase I;Bendability (DNAse)"},
-    ref="iFeatureOmegaCLI.py:5150-5196",
-))
+_register_pcp2("dna", "DPCP type2", "DPCP2", 2, "iFeatureOmegaCLI.py:5042-5092")
+_register_pcp2("dna", "TPCP type2", "TPCP2", 3, "iFeatureOmegaCLI.py:5150-5196")
 
 
 def _register_ps(k: int):
@@ -678,16 +654,7 @@ def _register_ps(k: int):
         table = np.eye(dim, dtype=np.float64)
 
         def kern(r: Ragged):
-            m = r.to_matrix()
-            ids = np.zeros((m.shape[0], m.shape[1] - k + 1), dtype=np.int64)
-            ok = np.ones_like(ids, dtype=bool)
-            for j in range(k):
-                t = m[:, j : m.shape[1] - k + 1 + j]
-                ok &= t < 4
-                ids = ids * 4 + np.where(t < 4, t, 0)
-            out = table[ids]
-            out = np.where(ok[..., None], out, 0.0)
-            return out.reshape(m.shape[0], -1)
+            return _gram_lookup(r, 4, k, table)
 
         return kern
 
@@ -748,34 +715,30 @@ def _register_autocorr(name: str, kind: str, prop_src, header_fn, ref: str):
         nlag = cfg["nlag"]
         table = prop_src(props)  # (P, 21)
 
-        need = {"broto": ("raw",), "ac": ("cen",),
-                "moran": ("cen", "ssq"), "geary": ("diffsq", "ssq")}[kind]
+        terms = {"broto": ("prod",), "ac": ("cprod",),
+                 "moran": ("cprod", "ssq"), "geary": ("sqdiff", "ssq")}[kind]
 
         def kern(r: Ragged):
             rs = r.strip(PGAP)
-            ws = K.LagWorkspace(rs, nlag)
-            blocks = []
-            for p in range(table.shape[0]):
-                x = table[p][rs.flat]
-                st = ws.stats(x, need)
-                if kind == "broto":
-                    v = st["raw"]
-                elif kind == "ac":
-                    v = st["cen"]
-                elif kind == "moran":
-                    v = st["cen"] / np.where(st["ssq"] == 0, 1.0,
-                                             st["ssq"] / st["lengths"])[:, None]
-                elif kind == "geary":
-                    Nl = st["lengths"][:, None]
-                    d = np.arange(1, nlag + 1)[None, :]
-                    v = ((Nl - 1.0) / (2.0 * (Nl - d))) * st["diffsq"] / np.where(
-                        st["ssq"] == 0, 1.0, st["ssq"])[:, None]
-                # rows shorter than nlag+1 are NaN in the reference ('NA')
-                short = st["lengths"] <= nlag
-                if kind in ("broto", "moran", "geary"):
-                    v = np.where(short[:, None], np.nan, v)
-                blocks.append(v)
-            return np.concatenate(blocks, axis=1)
+            S = K.lag_sums(rs, nlag, xs=table[:, rs.flat], terms=terms)
+            Nl = rs.lengths.astype(np.float64)[:, None]
+            if kind == "broto":
+                v = S["prod"] / K.lag_den(rs, nlag)
+            elif kind == "ac":
+                v = S["cprod"] / K.lag_den(rs, nlag)
+            elif kind == "moran":
+                ssq = S["ssq"][:, :, None]
+                v = (S["cprod"] / K.lag_den(rs, nlag)) / np.where(
+                    ssq == 0, 1.0, ssq / Nl)
+            else:  # geary
+                ssq = S["ssq"][:, :, None]
+                d = np.arange(1, nlag + 1)[None, :]
+                v = ((Nl - 1.0) / (2.0 * (Nl - d))) * S["sqdiff"] / np.where(
+                    ssq == 0, 1.0, ssq)
+            # rows shorter than nlag+1 are NaN in the reference ('NA')
+            if kind != "ac":
+                v = np.where(Nl <= nlag, np.nan, v)
+            return np.concatenate(v, axis=1)
 
         return kern
 
@@ -814,41 +777,36 @@ def _prop_pairs(props: list[str]) -> list[tuple[str, str]]:
     return out
 
 
-def _mk_cc_kernel(cfg, L):
-    props = cfg["aaindex"].split(";")
-    nlag = cfg["nlag"]
-    table = _aaindex_pickle_props(props)
-    pairs = [(props.index(a), props.index(b)) for a, b in _prop_pairs(props)]
+def _mk_cc(with_ac: bool):
+    """CC (ref :1652-1703): lag cross-covariance of every ordered property
+    pair; ACC (ref :1705-1770) prepends AC's auto-covariances."""
 
-    def kern(r: Ragged):
-        rs = r.strip(PGAP)
-        series = [table[p][rs.flat] for p in range(len(props))]
-        return np.concatenate(
-            [K.cross_cov(series[a], series[b], rs, nlag) for a, b in pairs], axis=1
-        )
+    def mk_kernel(cfg, L):
+        props = cfg["aaindex"].split(";")
+        nlag = cfg["nlag"]
+        table = _aaindex_pickle_props(props)
+        pairs = [(props.index(a), props.index(b)) for a, b in _prop_pairs(props)]
 
-    return kern
+        def kern(r: Ragged):
+            rs = r.strip(PGAP)
+            S = K.lag_sums(rs, nlag, xs=table[:, rs.flat],
+                           terms=("cprod",) if with_ac else (), cross=pairs)
+            blocks = [S["cprod"], S["cross"]] if with_ac else [S["cross"]]
+            den = K.lag_den(rs, nlag)
+            return np.concatenate([b / den for blk in blocks for b in blk], axis=1)
+
+        return kern
+
+    return mk_kernel
 
 
 register(DescriptorSpec(
     "CC", "protein",
     lambda cfg, L: [f"CC_{a}_{b}_lag.{n}" for a, b in _prop_pairs(cfg["aaindex"].split(";"))
                     for n in range(1, cfg["nlag"] + 1)],
-    _mk_cc_kernel, ref="iFeatureOmegaCLI.py:1652-1703",
+    _mk_cc(False), ref="iFeatureOmegaCLI.py:1652-1703",
     defaults=DESCRIPTORS["protein:AC"].defaults,
 ))
-
-
-def _mk_acc_kernel(cfg, L):
-    ac_k = DESCRIPTORS["protein:AC"].make_kernel(cfg, L)
-    cc_k = _mk_cc_kernel(cfg, L)
-
-    def kern(r: Ragged):
-        return np.concatenate([ac_k(r), cc_k(r)], axis=1)
-
-    return kern
-
-
 register(DescriptorSpec(
     "ACC", "protein",
     lambda cfg, L: (
@@ -857,7 +815,7 @@ register(DescriptorSpec(
         + [f"ACC_{a}_{b}_lag.{n}" for a, b in _prop_pairs(cfg["aaindex"].split(";"))
            for n in range(1, cfg["nlag"] + 1)]
     ),
-    _mk_acc_kernel, ref="iFeatureOmegaCLI.py:1705-1770",
+    _mk_cc(True), ref="iFeatureOmegaCLI.py:1705-1770",
     defaults=DESCRIPTORS["protein:AC"].defaults,
 ))
 
@@ -1059,33 +1017,15 @@ def _dist_matrices():
     return sw, gm
 
 
-def _pair_lag_sum(rs: Ragged, M: np.ndarray, nlag: int, mean: bool) -> np.ndarray:
-    """Σ_j M[s_j, s_{j+n}] per row for n=1..nlag (optionally / (L-n))."""
-    out = np.zeros((rs.n, nlag))
-    pos = np.arange(len(rs.flat)) - np.repeat(rs.offsets[:-1], rs.lengths)
-    rl = np.repeat(rs.lengths, rs.lengths)
-    rid_all = rs.row_ids()
-    for d in range(1, nlag + 1):
-        ok = pos + d < rl
-        idx = np.nonzero(ok)[0]
-        w = M[rs.flat[idx], rs.flat[idx + d]]
-        s = np.bincount(rid_all[idx], weights=w, minlength=rs.n)
-        if mean:
-            s = s / np.maximum(rs.lengths - d, 1.0)
-        out[:, d - 1] = s
-    return out
-
-
 def _mk_socnumber(cfg, L):
     sw, gm = _dist_matrices()
     nlag = cfg["nlag"]
+    mats = [sw**2, gm**2]
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        return np.concatenate([
-            _pair_lag_sum(rs, sw**2, nlag, mean=True),
-            _pair_lag_sum(rs, gm**2, nlag, mean=True),
-        ], axis=1)
+        S = K.lag_sums(rs, nlag, mats=mats)["mat"] / K.lag_den(rs, nlag)
+        return np.concatenate(S, axis=1)
 
     return kern
 
@@ -1102,11 +1042,11 @@ def _mk_qsorder(cfg, L):
     sw, gm = _dist_matrices()
     nlag, w = cfg["nlag"], cfg["weight"]
     perm = tk.perm_for(AA_ALT, gap_id=PGAP)
+    mats = [sw**2, gm**2]
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        tau_sw = _pair_lag_sum(rs, sw**2, nlag, mean=False)
-        tau_gm = _pair_lag_sum(rs, gm**2, nlag, mean=False)
+        tau_sw, tau_gm = K.lag_sums(rs, nlag, mats=mats)["mat"]
         counts = K.unigram_counts(rs.remap(perm), 20, normalize=False)
         den_sw = 1.0 + w * tau_sw.sum(axis=1, keepdims=True)
         den_gm = 1.0 + w * tau_gm.sum(axis=1, keepdims=True)
@@ -1153,7 +1093,7 @@ def _mk_paac(cfg, L):
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
-        theta = _pair_lag_sum(rs, R, lam, mean=True)  # (n, lam)
+        theta = K.lag_sums(rs, lam, mats=[R])["mat"][0] / K.lag_den(rs, lam)
         counts = K.unigram_counts(rs.remap(perm), 20, normalize=False)
         den = 1.0 + w * theta.sum(axis=1, keepdims=True)
         return np.concatenate([counts / den, w * theta / den], axis=1)
@@ -1174,16 +1114,13 @@ def _mk_apaac(cfg, L):
     lam, w = cfg["lambdaValue"], cfg["weight"]
     names, props = _paac_props(n_props=2)  # ref :2327 uses rows [1, len-1)
     perm = tk.perm_for(AA_ALT, gap_id=PGAP)
-    outer = [np.outer(props[p], props[p]) for p in range(props.shape[0])]
+    outer = [np.outer(p, p) for p in props]
 
     def kern(r: Ragged):
         rs = r.strip(PGAP)
+        S = K.lag_sums(rs, lam, mats=outer)["mat"] / K.lag_den(rs, lam)
         # theta order (ref :2348-2352): for n: for prop
-        cols = []
-        for d in range(1, lam + 1):
-            for p in range(len(outer)):
-                cols.append(_pair_lag_sum(rs, outer[p], d, mean=True)[:, d - 1])
-        theta = np.stack(cols, axis=1)
+        theta = S.transpose(1, 2, 0).reshape(rs.n, -1)
         counts = K.unigram_counts(rs.remap(perm), 20, normalize=False)
         den = 1.0 + w * theta.sum(axis=1, keepdims=True)
         return np.concatenate([counts / den, w * theta / den], axis=1)
@@ -1419,42 +1356,32 @@ register(DescriptorSpec(
 ))
 
 
-def _mk_dpcp(cfg, L):
-    sel, v = _phyche("didnaPhyche", cfg["Di-DNA-Phychem"].split(";"))
+def _register_pcp(seq_type: str, name: str, k: int, ref: str):
+    """DPCP/TPCP: k-gram frequency × each property value, property-major.
+    TPCP (k=3) takes no selection: ref :5103 overwrites it with ALL keys."""
+    fname, key, default = _props(seq_type, k)
 
-    def kern(r: Ragged):
-        f = K.kgram_counts(r.strip(DGAP), 4, 2, normalize=True)
-        return (f[:, None, :] * v[None, :, :]).reshape(r.n, -1)
+    def selection(cfg):
+        return cfg[key].split(";") if k == 2 else _phyche(fname)[0]
 
-    return kern
+    def mk_kernel(cfg, L):
+        _, v = _phyche(fname, selection(cfg))
 
+        def kern(r: Ragged):
+            f = K.kgram_counts(r.strip(DGAP), 4, k, normalize=True)
+            return (f[:, None, :] * v[None, :, :]).reshape(r.n, -1)
 
-register(DescriptorSpec(
-    "DPCP", "dna",
-    lambda cfg, L: [f"DPCP_{a}{b}_{p}" for p in cfg["Di-DNA-Phychem"].split(";")
-                    for a in NT for b in NT],
-    _mk_dpcp, defaults={"Di-DNA-Phychem": _DI_DNA_DEFAULT},
-    ref="iFeatureOmegaCLI.py:4990-5040",
-))
+        return kern
 
-
-def _mk_tpcp(cfg, L):
-    # quirk to replicate: ref :5103 overwrites the selection with ALL keys
-    sel, v = _phyche("tridnaPhyche", None)
-
-    def kern(r: Ragged):
-        f = K.kgram_counts(r.strip(DGAP), 4, 3, normalize=True)
-        return (f[:, None, :] * v[None, :, :]).reshape(r.n, -1)
-
-    return kern
+    register(DescriptorSpec(
+        name, seq_type,
+        lambda cfg, L: [f"{name}_{g}_{p}" for p in selection(cfg) for g in _kmers(NT, k)],
+        mk_kernel, defaults={key: default} if k == 2 else {}, ref=ref,
+    ))
 
 
-register(DescriptorSpec(
-    "TPCP", "dna",
-    lambda cfg, L: [f"TPCP_{g}_{p}" for p in _phyche("tridnaPhyche", None)[0]
-                    for g in _kmers(NT, 3)],
-    _mk_tpcp, ref="iFeatureOmegaCLI.py:5094-5148",
-))
+_register_pcp("dna", "DPCP", 2, "iFeatureOmegaCLI.py:4990-5040")
+_register_pcp("dna", "TPCP", 3, "iFeatureOmegaCLI.py:5094-5148")
 
 
 def _sorted_class_map(k: int):
@@ -1642,204 +1569,148 @@ register(DescriptorSpec(
 
 
 # --------------------------------------------------------------------------
-# DNA/RNA dinucleotide-property autocorrelations and Pse* family
+# DNA/RNA nucleotide-property autocorrelations and Pse* family: one builder
+# per family, registered per nucleic-acid type (tables from _DI_PROPS)
 # --------------------------------------------------------------------------
 
-_TRI_DNA_DEFAULT = "Dnase I;Bendability (DNAse)"
 
+def _register_dinuc_autocorr(seq_type: str, name: str, kind: str, ref: str):
+    """NMBroto/Moran/Geary over z-normalized dinucleotide properties."""
+    fname, key, default = _DI_PROPS[seq_type]
+    terms = {"broto": ("prod",), "moran": ("cprod", "headsq"),
+             "geary": ("sqdiff", "headsq")}[kind]
 
-def _gram_prop_series(rs: Ragged, k: int, prop_row: np.ndarray):
-    ids, r2 = K.gram_view(rs, 4, k)
-    return prop_row[ids], r2
-
-
-def _register_dna_autocorr(name: str, kind: str, ref: str):
     def mk_names(cfg, L):
-        return [f"{name}_{p}.lag{n}" for p in cfg["Di-DNA-Phychem"].split(";")
+        return [f"{name}_{p}.lag{n}" for p in cfg[key].split(";")
                 for n in range(1, cfg["nlag"] + 1)]
 
     def mk_kernel(cfg, L):
-        sel, v = _phyche("didnaPhyche", cfg["Di-DNA-Phychem"].split(";"), znorm=True)
+        _, v = _phyche(fname, cfg[key].split(";"), znorm=True)
         nlag = cfg["nlag"]
 
         def kern(r: Ragged):
-            rs = r.strip(DGAP)
-            blocks = []
-            for p in range(v.shape[0]):
-                x, r2 = _gram_prop_series(rs, 2, v[p])
-                st = K.lag_stats(x, r2, nlag)
-                Nl = st["lengths"][:, None]
+            ids, r2 = K.gram_view(r.strip(DGAP), 4, 2)
+            S = K.lag_sums(r2, nlag, xs=v[:, ids], terms=terms)
+            Nl = r2.lengths.astype(np.float64)[:, None]
+            if kind == "broto":
+                out = np.where(Nl <= nlag, 0.0, S["prod"] / K.lag_den(r2, nlag))
+            elif kind == "moran":
+                # Idup/(headssq/N) (ref :5689-5692); /0 → exception → 0, also
+                # for a row without a dinucleotide (N = 0)
+                den = S["headsq"] / np.maximum(Nl, 1.0)
+                cen = S["cprod"] / K.lag_den(r2, nlag)
+                out = np.where(den != 0, cen / np.where(den == 0, 1, den), 0.0)
+            else:  # geary: (diffsq/(2(N-d))) / (headssq/(N-1)) (ref :5779-5781)
                 d = np.arange(1, nlag + 1)[None, :]
-                if kind == "broto":
-                    out = st["raw"]
-                    out = np.where((st["lengths"] <= nlag)[:, None], 0.0, out)
-                elif kind == "moran":
-                    # Idup/(headssq/N) (ref :5689-5692); /0 → exception → 0
-                    den = st["headssq"] / Nl
-                    out = np.where(den != 0, st["cen"] / np.where(den == 0, 1, den), 0.0)
-                else:  # geary: (diffsq/(2(N-d))) / (headssq/(N-1)) (ref :5779-5781)
-                    num = st["diffsq"] / (2.0 * np.maximum(Nl - d, 1.0))
-                    den = st["headssq"] / np.maximum(Nl - 1.0, 1.0)
-                    out = np.where(den != 0, num / np.where(den == 0, 1, den), 0.0)
-                blocks.append(out)
-            return np.concatenate(blocks, axis=1)
+                num = S["sqdiff"] / (2.0 * np.maximum(Nl - d, 1.0))
+                den = S["headsq"] / np.maximum(Nl - 1.0, 1.0)
+                out = np.where(den != 0, num / np.where(den == 0, 1, den), 0.0)
+            return np.concatenate(out, axis=1)
 
         return kern
 
-    register(DescriptorSpec(
-        name, "dna", mk_names, mk_kernel, ref=ref,
-        defaults={"Di-DNA-Phychem": _DI_DNA_DEFAULT, "nlag": 3},
-    ))
+    register(DescriptorSpec(name, seq_type, mk_names, mk_kernel, ref=ref,
+                            defaults={key: default, "nlag": 3}))
 
 
-_register_dna_autocorr("NMBroto", "broto", "iFeatureOmegaCLI.py:5611-5671")
-_register_dna_autocorr("Moran", "moran", "iFeatureOmegaCLI.py:5673-5731")
-_register_dna_autocorr("Geary", "geary", "iFeatureOmegaCLI.py:5733-5791")
+_register_dinuc_autocorr("dna", "NMBroto", "broto", "iFeatureOmegaCLI.py:5611-5671")
+_register_dinuc_autocorr("dna", "Moran", "moran", "iFeatureOmegaCLI.py:5673-5731")
+_register_dinuc_autocorr("dna", "Geary", "geary", "iFeatureOmegaCLI.py:5733-5791")
 
 
-def _register_dactac(name: str, k: int, mode: str, prop_key: str, default_props: str, ref: str):
-    """DAC/TAC (auto), DCC/TCC (cross), DACC/TACC (concat), ref :5800-5950."""
-
-    def props_of(cfg):
-        return cfg[prop_key].split(";")
+def _register_dactac(seq_type: str, name: str, k: int, ref: str):
+    """DAC/TAC (ref :5800-5835): lag auto-covariance of each raw k-nucleotide
+    property (no z-norm, ref :4162).  DCC/DACC/TCC/TACC register this too:
+    the reference dispatch evals _make_ac_vector for them (ref :3998-4003,
+    iRNA :6622-6624), so they are AC values under their own name prefix."""
+    fname, key, default = _props(seq_type, k)
 
     def mk_names(cfg, L):
-        ps = props_of(cfg)
-        nlag = cfg["nlag"]
-        if mode == "ac":
-            return [f"{name}_{p}.lag{n}" for p in ps for n in range(1, nlag + 1)]
-        if mode == "cc":
-            return [f"{name}_{a}-{b}-lag.{n}" for a, b in _prop_pairs(ps)
-                    for n in range(1, nlag + 1)]
-        return ([f"{p}.lag{n}" for p in ps for n in range(1, nlag + 1)]
-                + [f"{name}_{a}-{b}-lag.{n}" for a, b in _prop_pairs(ps)
-                   for n in range(1, nlag + 1)])
+        return [f"{name}_{p}.lag{n}" for p in cfg[key].split(";")
+                for n in range(1, cfg["nlag"] + 1)]
 
     def mk_kernel(cfg, L):
-        ps = props_of(cfg)
-        fname = "didnaPhyche" if k == 2 else "tridnaPhyche"
-        sel, v = _phyche(fname, ps)  # raw values (no z-norm, ref :4162)
+        _, v = _phyche(fname, cfg[key].split(";"))
         nlag = cfg["nlag"]
-        pairs = [(ps.index(a), ps.index(b)) for a, b in _prop_pairs(ps)]
 
         def kern(r: Ragged):
-            rs = r.strip(DGAP)
-            ids, r2 = K.gram_view(rs, 4, k)
-            blocks = []
-            if mode in ("ac", "acc"):
-                for p in range(v.shape[0]):
-                    st = K.lag_stats(v[p][ids], r2, nlag)
-                    blocks.append(st["cen"])
-            if mode in ("cc", "acc"):
-                series = [v[p][ids] for p in range(v.shape[0])]
-                for a, b in pairs:
-                    blocks.append(K.cross_cov(series[a], series[b], r2, nlag))
-            return np.concatenate(blocks, axis=1)
+            ids, r2 = K.gram_view(r.strip(DGAP), 4, k)
+            S = K.lag_sums(r2, nlag, xs=v[:, ids], terms=("cprod",))
+            return np.concatenate(S["cprod"] / K.lag_den(r2, nlag), axis=1)
 
         return kern
 
-    register(DescriptorSpec(
-        name, "dna", mk_names, mk_kernel, ref=ref,
-        defaults={prop_key: default_props, "nlag": 3},
-    ))
+    register(DescriptorSpec(name, seq_type, mk_names, mk_kernel, ref=ref,
+                            defaults={key: default, "nlag": 3}))
 
 
-_register_dactac("DAC", 2, "ac", "Di-DNA-Phychem", _DI_DNA_DEFAULT, "iFeatureOmegaCLI.py:5800-5835")
-# NOTE ref :3998-4003: the DNA dispatch evals _make_ac_vector for DCC/DACC/
-# TCC/TACC too — they produce AC values under their own name prefix
-_register_dactac("DCC", 2, "ac", "Di-DNA-Phychem", _DI_DNA_DEFAULT, "iFeatureOmegaCLI.py:3999,5800-5835")
-_register_dactac("DACC", 2, "ac", "Di-DNA-Phychem", _DI_DNA_DEFAULT, "iFeatureOmegaCLI.py:4000,5800-5835")
-_register_dactac("TAC", 3, "ac", "Tri-DNA-Phychem", _TRI_DNA_DEFAULT, "iFeatureOmegaCLI.py:5800-5835")
-_register_dactac("TCC", 3, "ac", "Tri-DNA-Phychem", _TRI_DNA_DEFAULT, "iFeatureOmegaCLI.py:4002,5800-5835")
-_register_dactac("TACC", 3, "ac", "Tri-DNA-Phychem", _TRI_DNA_DEFAULT, "iFeatureOmegaCLI.py:4003,5800-5835")
+_register_dactac("dna", "DAC", 2, "iFeatureOmegaCLI.py:5800-5835")
+_register_dactac("dna", "DCC", 2, "iFeatureOmegaCLI.py:3999,5800-5835")
+_register_dactac("dna", "DACC", 2, "iFeatureOmegaCLI.py:4000,5800-5835")
+_register_dactac("dna", "TAC", 3, "iFeatureOmegaCLI.py:5800-5835")
+_register_dactac("dna", "TCC", 3, "iFeatureOmegaCLI.py:4002,5800-5835")
+_register_dactac("dna", "TACC", 3, "iFeatureOmegaCLI.py:4003,5800-5835")
 
 
-def _register_pse(name: str, comp_k: int, corr_k: int, series: bool,
-                  prop_key: str, default_props: str, fname: str, ref: str,
-                  extra_defaults: dict | None = None):
+def _register_pse(seq_type: str, name: str, comp_k: int, corr_k: int, series: bool,
+                  ref: str, extra_defaults: dict | None = None):
     """PseDNC/PseKNC/PCPse*/SCPse* (ref :6000-6182).
 
     comp_k: k of the composition block; corr_k: k of the correlation grams;
     series=False → θ via mean-squared-diff (type 1), True → per-property
     products (type 2, SC*)."""
+    fname, key, default = _props(seq_type, corr_k)
 
     def mk_names(cfg, L):
         lam = cfg["lambdaValue"]
         grams = sorted(_kmers(NT, cfg.get("kmer", comp_k)))
-        base = [f"{name}_{g}" for g in grams]
-        if series:
-            n_p = len(cfg[prop_key].split(";"))
-            return base + [f"{name}_lamada_{i}" for i in range(1, lam * n_p + 1)]
-        return base + [f"{name}_lamada_{i}" for i in range(1, lam + 1)]
+        n_theta = lam * len(cfg[key].split(";")) if series else lam
+        return ([f"{name}_{g}" for g in grams]
+                + [f"{name}_lamada_{i}" for i in range(1, n_theta + 1)])
 
     def mk_kernel(cfg, L):
         lam, w = cfg["lambdaValue"], cfg["weight"]
-        ps = cfg[prop_key].split(";")
-        sel, v = _phyche(fname, ps)  # raw pickle values
-        dim_c = 4**corr_k
-        if not series:
-            # R matrix: mean over props of (P[a]-P[b])² (ref :5963-5967)
-            R = ((v[:, :, None] - v[:, None, :]) ** 2).mean(axis=0)
+        _, v = _phyche(fname, cfg[key].split(";"))  # raw pickle values
+        if series:
+            mats = [np.outer(p, p) for p in v]
         else:
-            outer = [np.outer(v[p], v[p]) for p in range(v.shape[0])]
+            # R matrix: mean over props of (P[a]-P[b])² (ref :5963-5967)
+            mats = [((v[:, :, None] - v[:, None, :]) ** 2).mean(axis=0)]
 
         def kern(r: Ragged):
             rs = r.strip(DGAP)
             ids, r2 = K.gram_view(rs, 4, corr_k)
             # θ[λ] uses lag λ+1 over the gram series, denominator
-            # L - λ - corr_k = N_series - (λ+1)
-            if not series:
-                theta = np.zeros((rs.n, lam))
-                for d in range(1, lam + 1):
-                    theta[:, d - 1] = _pair_lag_sum_series(ids, r2, R, d)
-            else:
-                cols = []
-                for d in range(1, lam + 1):
-                    for p in range(len(outer)):
-                        cols.append(_pair_lag_sum_series(ids, r2, outer[p], d))
-                theta = np.stack(cols, axis=1)
+            # L - λ - corr_k = N_series - (λ+1); SC* orders θ lag-major
+            S = K.lag_sums(r2, lam, mats=mats)["mat"] / K.lag_den(r2, lam)
+            theta = S.transpose(1, 2, 0).reshape(rs.n, -1)
             freq = K.kgram_counts(rs, 4, cfg.get("kmer", comp_k), normalize=True)
             den = 1.0 + w * theta.sum(axis=1, keepdims=True)
             return np.concatenate([freq / den, w * theta / den], axis=1)
 
         return kern
 
-    defaults = {prop_key: default_props, "weight": 0.05, "lambdaValue": 3}
+    defaults = {key: default, "weight": 0.05, "lambdaValue": 3}
     defaults.update(extra_defaults or {})
-    register(DescriptorSpec(name, "dna", mk_names, mk_kernel, ref=ref,
+    register(DescriptorSpec(name, seq_type, mk_names, mk_kernel, ref=ref,
                             defaults=defaults))
 
 
-def _pair_lag_sum_series(ids: np.ndarray, r2, M: np.ndarray, d: int) -> np.ndarray:
-    """Σ_j M[g_j, g_{j+d}] / (N_series - d) over a gram-id series."""
-    pos = np.arange(len(ids)) - np.repeat(r2.offsets[:-1], r2.lengths)
-    rl = np.repeat(r2.lengths, r2.lengths)
-    ok = pos + d < rl
-    idx = np.nonzero(ok)[0]
-    w = M[ids[idx], ids[idx + d]]
-    s = np.bincount(r2.row_ids()[idx], weights=w, minlength=r2.n)
-    return s / np.maximum(r2.lengths - d, 1.0)
-
-
-_register_pse("PseDNC", 2, 2, False, "Di-DNA-Phychem", _DI_DNA_DEFAULT,
-              "didnaPhyche", "iFeatureOmegaCLI.py:6000-6028")
-_register_pse("PCPseDNC", 2, 2, False, "Di-DNA-Phychem", _DI_DNA_DEFAULT,
-              "didnaPhyche", "iFeatureOmegaCLI.py:6030-6058")
-_register_pse("PCPseTNC", 3, 3, False, "Tri-DNA-Phychem", _TRI_DNA_DEFAULT,
-              "tridnaPhyche", "iFeatureOmegaCLI.py:6060-6090")
-_register_pse("SCPseDNC", 2, 2, True, "Di-DNA-Phychem", _DI_DNA_DEFAULT,
-              "didnaPhyche", "iFeatureOmegaCLI.py:6092-6121")
-_register_pse("SCPseTNC", 3, 3, True, "Tri-DNA-Phychem", _TRI_DNA_DEFAULT,
-              "tridnaPhyche", "iFeatureOmegaCLI.py:6123-6151")
-_register_pse("PseKNC", 3, 2, False, "Di-DNA-Phychem", _DI_DNA_DEFAULT,
-              "didnaPhyche", "iFeatureOmegaCLI.py:6153-6182",
+_register_pse("dna", "PseDNC", 2, 2, False, "iFeatureOmegaCLI.py:6000-6028")
+_register_pse("dna", "PCPseDNC", 2, 2, False, "iFeatureOmegaCLI.py:6030-6058")
+_register_pse("dna", "PCPseTNC", 3, 3, False, "iFeatureOmegaCLI.py:6060-6090")
+_register_pse("dna", "SCPseDNC", 2, 2, True, "iFeatureOmegaCLI.py:6092-6121")
+_register_pse("dna", "SCPseTNC", 3, 3, True, "iFeatureOmegaCLI.py:6123-6151")
+_register_pse("dna", "PseKNC", 3, 2, False, "iFeatureOmegaCLI.py:6153-6182",
               extra_defaults={"weight": 0.1, "lambdaValue": 2, "kmer": 3})
 
 
 # --------------------------------------------------------------------------
 # RNA registration (ref iRNA :6492-8974 is a structural copy of iDNA with
-# dirnaPhyche properties; U→T canonicalization happens at tokenize time so
-# alphabet-generic kernels are shared verbatim)
+# dirnaPhyche properties; U→T canonicalization happens at tokenize time).
+# Alphabet-generic DNA specs are shared verbatim; the property families are
+# registered by the DNA builders with seq_type "rna", which reads the
+# dirnaPhyche table and Di-RNA-Phychem option from _DI_PROPS.
 # --------------------------------------------------------------------------
 
 _RNA_SHARED = [
@@ -1853,177 +1724,19 @@ for _n in _RNA_SHARED:
     register(DescriptorSpec(_sp.name, "rna", _sp.make_names, _sp.make_kernel,
                             _sp.equal_length, dict(_sp.defaults), _sp.ref))
 
-_DI_RNA_DEFAULT = ("Rise (RNA);Roll (RNA);Shift (RNA);Slide (RNA);"
-                   "Tilt (RNA);Twist (RNA)")
-
-
-def _mk_dpcp_rna(cfg, L):
-    sel, v = _phyche("dirnaPhyche", cfg["Di-RNA-Phychem"].split(";"))
-
-    def kern(r: Ragged):
-        f = K.kgram_counts(r.strip(DGAP), 4, 2, normalize=True)
-        return (f[:, None, :] * v[None, :, :]).reshape(r.n, -1)
-
-    return kern
-
-
-register(DescriptorSpec(
-    "DPCP", "rna",
-    lambda cfg, L: [f"DPCP_{a}{b}_{p}" for p in cfg["Di-RNA-Phychem"].split(";")
-                    for a in NT for b in NT],
-    _mk_dpcp_rna, defaults={"Di-RNA-Phychem": _DI_RNA_DEFAULT},
-    ref="iFeatureOmegaCLI.py:7554-7604",
-))
-
-
-def _mk_dpcp2_rna(cfg, L):
-    sel, v = _phyche("dirnaPhyche", cfg["Di-RNA-Phychem"].split(";"))
-    table = v.T  # (16, P)
-
-    def kern(r: Ragged):
-        m = r.to_matrix()
-        ids = np.zeros((m.shape[0], m.shape[1] - 1), dtype=np.int64)
-        ok = (m[:, :-1] < 4) & (m[:, 1:] < 4)
-        ids = np.where(ok, m[:, :-1] * 4 + m[:, 1:], 0)
-        g = table[ids]
-        g = np.where(ok[..., None], g, 0.0)
-        return g.transpose(0, 2, 1).reshape(m.shape[0], -1)  # prop-major values
-
-    return kern
-
-
-register(DescriptorSpec(
-    "DPCP type2", "rna",
-    lambda cfg, L: [f"DPCP2_{p}_pos{i}" for i in range(1, L)
-                    for p in cfg["Di-RNA-Phychem"].split(";")],
-    _mk_dpcp2_rna, equal_length=True,
-    defaults={"Di-RNA-Phychem": _DI_RNA_DEFAULT},
-    ref="iFeatureOmegaCLI.py:7606-7656",
-))
-
-
-def _register_rna_autocorr(name: str, kind: str, ref: str):
-    def mk_names(cfg, L):
-        return [f"{name}_{p}.lag{n}" for p in cfg["Di-RNA-Phychem"].split(";")
-                for n in range(1, cfg["nlag"] + 1)]
-
-    def mk_kernel(cfg, L):
-        sel, v = _phyche("dirnaPhyche", cfg["Di-RNA-Phychem"].split(";"), znorm=True)
-        nlag = cfg["nlag"]
-        need = {"broto": ("raw",), "moran": ("cen", "headssq"),
-                "geary": ("diffsq", "headssq")}[kind]
-
-        def kern(r: Ragged):
-            rs = r.strip(DGAP)
-            ids, r2 = K.gram_view(rs, 4, 2)
-            ws = K.LagWorkspace(r2, nlag)
-            blocks = []
-            for p in range(v.shape[0]):
-                st = ws.stats(v[p][ids], need)
-                Nl = st["lengths"][:, None]
-                d = np.arange(1, nlag + 1)[None, :]
-                if kind == "broto":
-                    out = np.where((st["lengths"] <= nlag)[:, None], 0.0, st["raw"])
-                elif kind == "moran":
-                    den = st["headssq"] / Nl
-                    out = np.where(den != 0, st["cen"] / np.where(den == 0, 1, den), 0.0)
-                else:
-                    num = st["diffsq"] / (2.0 * np.maximum(Nl - d, 1.0))
-                    den = st["headssq"] / np.maximum(Nl - 1.0, 1.0)
-                    out = np.where(den != 0, num / np.where(den == 0, 1, den), 0.0)
-                blocks.append(out)
-            return np.concatenate(blocks, axis=1)
-
-        return kern
-
-    register(DescriptorSpec(name, "rna", mk_names, mk_kernel, ref=ref,
-                            defaults={"Di-RNA-Phychem": _DI_RNA_DEFAULT, "nlag": 3}))
-
-
-_register_rna_autocorr("NMBroto", "broto", "iFeatureOmegaCLI.py:8175-8235")
-_register_rna_autocorr("Moran", "moran", "iFeatureOmegaCLI.py:8237-8295")
-_register_rna_autocorr("Geary", "geary", "iFeatureOmegaCLI.py:8297-8355")
-
-
-def _register_rna_dac(name: str, ref: str):
-    def mk_names(cfg, L):
-        return [f"{name}_{p}.lag{n}" for p in cfg["Di-RNA-Phychem"].split(";")
-                for n in range(1, cfg["nlag"] + 1)]
-
-    def mk_kernel(cfg, L):
-        sel, v = _phyche("dirnaPhyche", cfg["Di-RNA-Phychem"].split(";"))
-        nlag = cfg["nlag"]
-
-        def kern(r: Ragged):
-            rs = r.strip(DGAP)
-            ids, r2 = K.gram_view(rs, 4, 2)
-            blocks = []
-            for p in range(v.shape[0]):
-                st = K.lag_stats(v[p][ids], r2, nlag)
-                blocks.append(st["cen"])
-            return np.concatenate(blocks, axis=1)
-
-        return kern
-
-    register(DescriptorSpec(name, "rna", mk_names, mk_kernel, ref=ref,
-                            defaults={"Di-RNA-Phychem": _DI_RNA_DEFAULT, "nlag": 3}))
-
-
-# RNA dispatch shares the same _make_ac_vector quirk for DCC/DACC (ref :6622-6624)
-_register_rna_dac("DAC", "iFeatureOmegaCLI.py:8370-8420")
-_register_rna_dac("DCC", "iFeatureOmegaCLI.py:6623,8370-8420")
-_register_rna_dac("DACC", "iFeatureOmegaCLI.py:6624,8370-8420")
-
-
-def _register_rna_pse(name: str, series: bool, ref: str, extra: dict | None = None):
-    def mk_names(cfg, L):
-        lam = cfg["lambdaValue"]
-        grams = sorted(_kmers(NT, cfg.get("kmer", 2)))
-        base = [f"{name}_{g}" for g in grams]
-        if series:
-            n_p = len(cfg["Di-RNA-Phychem"].split(";"))
-            return base + [f"{name}_lamada_{i}" for i in range(1, lam * n_p + 1)]
-        return base + [f"{name}_lamada_{i}" for i in range(1, lam + 1)]
-
-    def mk_kernel(cfg, L):
-        lam, w = cfg["lambdaValue"], cfg["weight"]
-        ps = cfg["Di-RNA-Phychem"].split(";")
-        sel, v = _phyche("dirnaPhyche", ps)
-        if not series:
-            R = ((v[:, :, None] - v[:, None, :]) ** 2).mean(axis=0)
-        else:
-            outer = [np.outer(v[p], v[p]) for p in range(v.shape[0])]
-
-        def kern(r: Ragged):
-            rs = r.strip(DGAP)
-            ids, r2 = K.gram_view(rs, 4, 2)
-            if not series:
-                theta = np.zeros((rs.n, lam))
-                for d in range(1, lam + 1):
-                    theta[:, d - 1] = _pair_lag_sum_series(ids, r2, R, d)
-            else:
-                cols = []
-                for d in range(1, lam + 1):
-                    for p in range(len(outer)):
-                        cols.append(_pair_lag_sum_series(ids, r2, outer[p], d))
-                theta = np.stack(cols, axis=1)
-            freq = K.kgram_counts(rs, 4, cfg.get("kmer", 2), normalize=True)
-            den = 1.0 + w * theta.sum(axis=1, keepdims=True)
-            return np.concatenate([freq / den, w * theta / den], axis=1)
-
-        return kern
-
-    defaults = {"Di-RNA-Phychem": _DI_RNA_DEFAULT, "weight": 0.05, "lambdaValue": 3}
-    defaults.update(extra or {})
-    register(DescriptorSpec(name, "rna", mk_names, mk_kernel, ref=ref,
-                            defaults=defaults))
-
-
-_register_rna_pse("PseDNC", False, "iFeatureOmegaCLI.py:8564-8590")
-_register_rna_pse("PCPseDNC", False, "iFeatureOmegaCLI.py:8594-8620")
-_register_rna_pse("SCPseDNC", True, "iFeatureOmegaCLI.py:8656-8680")
-_register_rna_pse("PseKNC", False, "iFeatureOmegaCLI.py:8716-8745",
-                  extra={"kmer": 3, "weight": 0.05, "lambdaValue": 3})
+_register_pcp("rna", "DPCP", 2, "iFeatureOmegaCLI.py:7554-7604")
+_register_pcp2("rna", "DPCP type2", "DPCP2", 2, "iFeatureOmegaCLI.py:7606-7656")
+_register_dinuc_autocorr("rna", "NMBroto", "broto", "iFeatureOmegaCLI.py:8175-8235")
+_register_dinuc_autocorr("rna", "Moran", "moran", "iFeatureOmegaCLI.py:8237-8295")
+_register_dinuc_autocorr("rna", "Geary", "geary", "iFeatureOmegaCLI.py:8297-8355")
+_register_dactac("rna", "DAC", 2, "iFeatureOmegaCLI.py:8370-8420")
+_register_dactac("rna", "DCC", 2, "iFeatureOmegaCLI.py:6623,8370-8420")
+_register_dactac("rna", "DACC", 2, "iFeatureOmegaCLI.py:6624,8370-8420")
+_register_pse("rna", "PseDNC", 2, 2, False, "iFeatureOmegaCLI.py:8564-8590")
+_register_pse("rna", "PCPseDNC", 2, 2, False, "iFeatureOmegaCLI.py:8594-8620")
+_register_pse("rna", "SCPseDNC", 2, 2, True, "iFeatureOmegaCLI.py:8656-8680")
+_register_pse("rna", "PseKNC", 3, 2, False, "iFeatureOmegaCLI.py:8716-8745",
+              extra_defaults={"kmer": 3, "weight": 0.05, "lambdaValue": 3})
 
 
 # --------------------------------------------------------------------------

@@ -426,6 +426,22 @@ def minhash_dedup(
     return result
 
 
+def _min_shared(threshold: float, min_n: int) -> int:
+    """Least shared-shingle count a pair needs to reach `threshold` when
+    every doc holds ≥ min_n shingles.
+
+    The final filter computes n_inter / (n_a + n_b − n_inter) in doubles,
+    which for a given n_inter = k is largest at n_a = n_b = min_n; the
+    bound is the least integer k whose k / (2·min_n − k) passes that same
+    comparison.  (The closed form ⌈2·t·n/(1+t)⌉ rounds in floats and
+    overshoots, e.g. t=0.2, n=12 gives 5 where a 4-of-20 pair has jaccard
+    exactly 0.2.)"""
+    for k in range(1, min_n + 1):
+        if k / (2 * min_n - k) >= threshold:
+            return k
+    return max(min_n, 1)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -587,19 +603,14 @@ def ngram_jaccard_pairs(
                         [pa.array(a_vals), pa.array(b_vals)],
                         ["id_a", "id_b"])
 
-    # Pre-filter bound (semantics-free): jaccard ≥ t ⟺ n_inter ≥
-    # t/(1+t)·(n_a+n_b) ≥ t/(1+t)·2·min(n_sh), so pairs under the bound
-    # can never pass the threshold — dropping them BEFORE the size joins
-    # shrinks the candidate table (100M+ rows here) to the near-survivor
-    # set (guide §8: decide with small rows).  One scalar agg on the
-    # cached shingle table; also learns the doc count for the broadcast
-    # decision.
-    import math
-
+    # Pre-filter bound (semantics-free): pairs under it can never pass the
+    # threshold — dropping them BEFORE the size joins shrinks the candidate
+    # table (100M+ rows here) to the near-survivor set (guide §8: decide
+    # with small rows).  One scalar agg on the cached shingle table; also
+    # learns the doc count for the broadcast decision.
     szstats = sizes.agg(F.min("n_sh").alias("mn"),
                         F.count(F.lit(1)).alias("nd")).collect()[0]
-    min_n = szstats["mn"] or 0
-    bound = max(1, math.ceil(2.0 * threshold * min_n / (1.0 + threshold)))
+    bound = _min_shared(threshold, szstats["mn"] or 0)
     # size joins: one row per doc — broadcast when bounded (the normal
     # case after the n_inter pre-filter leaves few candidate rows, the
     # joins are cheap either way; broadcast just avoids shuffling them)

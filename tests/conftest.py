@@ -11,6 +11,9 @@ from ifeatureomega_cli_spark.session import get_spark  # noqa: E402
 
 FIXDIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 GOLDDIR = os.path.join(FIXDIR, "golden")
+# ~20 drug-like molecules: fused heteroaromatics, nitro groups, thioureas,
+# polycycles — the panel every ligand-family test runs end to end
+SMILES_PANEL = os.path.join(FIXDIR, "chemical_smiles.txt")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 

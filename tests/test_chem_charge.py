@@ -19,6 +19,7 @@ import pytest
 from ifeatureomega_cli_spark.functions.chemdesc_charge import (
     _all_charges, charge_descriptors, gasteiger_charges)
 from ifeatureomega_cli_spark.functions.molgraph import parse_smiles
+from tests.conftest import SMILES_PANEL
 
 
 def test_methane_published_anchor():
@@ -133,7 +134,7 @@ def test_empty_signed_selections():
 
 
 def test_reference_smiles_panel_all_compute():
-    with open("/root/reference/data_examples/Chemical_SMILES.txt") as f:
+    with open(SMILES_PANEL) as f:
         for line in f:
             s = line.strip()
             if not s:

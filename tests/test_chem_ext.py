@@ -15,6 +15,7 @@ from ifeatureomega_cli_spark.functions.chemdesc_ext import (
     autocorrelation_geary, autocorrelation_moran, basak, burden, estate,
     estate_fingerprint_counts, estate_indices, estate_type_members)
 from ifeatureomega_cli_spark.functions.molgraph import parse_smiles
+from tests.conftest import SMILES_PANEL
 
 _TYPE_NAMES = [t[0] for t in _ESTATE_TYPES]
 
@@ -251,22 +252,17 @@ def test_cats_spark_width(spark):
 # --------------------------------- reference example-file end-to-end
 
 def test_reference_example_smiles_all_graph_families(spark):
-    """The reference's own Chemical_SMILES.txt (19 real drug-like
-    molecules, incl. fused heteroaromatic systems, nitro groups, thio-
-    ureas, spiro-free polycycles) runs through every real graph family —
-    the exact workload a reference user brings (skips if the reference
-    tree is absent; the molecules are NOT bundled into this repo)."""
-    import os
-
-    path = "/root/reference/data_examples/Chemical_SMILES.txt"
-    if not os.path.exists(path):
-        pytest.skip("reference example data not present")
+    """The bundled drug-like SMILES panel (fused heteroaromatic systems,
+    nitro groups, thioureas, polycycles) runs through every real graph
+    family — the workload a reference user brings."""
     from ifeatureomega_cli_spark.operators.ligand import (
         GRAPH_FAMILY_NAMES, family_width, ligand_descriptors, read_smiles)
 
-    mols = read_smiles(spark, path)
+    with open(SMILES_PANEL) as f:
+        n_panel = sum(1 for line in f if line.strip())
+    mols = read_smiles(spark, SMILES_PANEL)
     n = mols.count()
-    assert n == 19
+    assert n == n_panel
     for family in sorted(GRAPH_FAMILY_NAMES):
         out = ligand_descriptors(mols, family)
         rows = out.collect()

@@ -13,6 +13,7 @@ import pytest
 from ifeatureomega_cli_spark.functions.chemdesc_fp import (
     connectivity_invariants, feature_invariants, morgan_fingerprint)
 from ifeatureomega_cli_spark.functions.molgraph import parse_smiles
+from tests.conftest import SMILES_PANEL
 
 
 def _nenv(smi, radius, **kw):
@@ -99,7 +100,7 @@ def test_family_kernels_route_real():
 
 def test_reference_smiles_panel_all_compute():
     from ifeatureomega_cli_spark.functions.chemdesc_fp import FP_FAMILIES
-    with open("/root/reference/data_examples/Chemical_SMILES.txt") as f:
+    with open(SMILES_PANEL) as f:
         smis = [s.strip() for s in f if s.strip()]
     fps = []
     for s in smis:

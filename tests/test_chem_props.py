@@ -20,6 +20,7 @@ from ifeatureomega_cli_spark.functions.chemdesc_props import (
     labute_asa, labute_asa_contribs, mol_logp, mol_mr,
     molecular_properties, tpsa, unsaturation_index)
 from ifeatureomega_cli_spark.functions.molgraph import parse_smiles
+from tests.conftest import SMILES_PANEL
 
 
 def _types(smi):
@@ -218,7 +219,7 @@ def test_molecular_properties_family_vector():
 
 
 def test_reference_smiles_panel_all_compute():
-    with open("/root/reference/data_examples/Chemical_SMILES.txt") as f:
+    with open(SMILES_PANEL) as f:
         for line in f:
             s = line.strip()
             if not s:
@@ -284,7 +285,7 @@ def test_moe_type_routes_real():
 
 def test_moe_type_reference_panel():
     from ifeatureomega_cli_spark.functions.chemdesc_props import moe_type
-    with open("/root/reference/data_examples/Chemical_SMILES.txt") as f:
+    with open(SMILES_PANEL) as f:
         for line in f:
             s = line.strip()
             if not s:

@@ -58,6 +58,25 @@ def test_subsequence_short_rows(spark):
     assert (out[0] == 0).all() and (out[1] == 0).all() and out[2].sum() > 0
 
 
+@pytest.mark.parametrize("seq_type", ["dna", "rna"])
+@pytest.mark.parametrize("name", ["Moran", "Geary", "NMBroto"])
+def test_nucleotide_autocorr_rows_without_pairs(seq_type, name):
+    """0-, 1- and 2-nt rows and all-gap rows hold no lag pair: their
+    autocorrelations are 0, never NaN (the reference catches the /0 and
+    writes 0; Moran used to divide 0 by N = 0)."""
+    from ifeatureomega_cli_spark.functions.kernels import Ragged
+    from ifeatureomega_cli_spark.functions.registry import get_spec
+
+    gap = 4
+    rows = [[], [0], [2, 3], [gap, gap, gap], [1, gap, 2], [0, 1, 2, 3] * 5]
+    r = Ragged.from_arrays([np.array(x, dtype=np.int64) for x in rows])
+    out = get_spec(f"{seq_type}:{name}").kernel()(r)
+    assert out.shape == (len(rows), 18)
+    assert np.isfinite(out).all()
+    assert (out[:5] == 0).all()
+    assert (out[5] != 0).any()
+
+
 def test_impute_mean_all_nan_column_stays_nan(spark):
     """A fully-NaN column has no mean — the reference leaves it NaN
     (np.mean of empty slice); so do we."""

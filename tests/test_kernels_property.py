@@ -9,8 +9,8 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from ifeatureomega_cli_spark.functions.kernels import (
-    LagWorkspace, Ragged, kgram_counts, kspaced_pair_counts,
-    running_count_frequency, unigram_counts)
+    Ragged, kgram_counts, kspaced_pair_counts, lag_den, lag_sums,
+    positional_gram_ids, running_count_frequency, unigram_counts)
 
 token_row = st.lists(st.integers(0, 20), min_size=0, max_size=40)
 batches = st.lists(token_row, min_size=1, max_size=12)
@@ -87,31 +87,68 @@ def test_running_count_frequency_matches_naive(rows):
             assert abs(got[i, j] - exp) < 1e-12
 
 
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.lists(st.floats(-3, 3, allow_nan=False), min_size=0,
-                         max_size=25), min_size=1, max_size=8),
-       st.integers(1, 4))
-def test_lag_workspace_matches_naive(series, nlag):
-    lengths = np.array([len(s) for s in series], dtype=np.int64)
-    flat = np.concatenate([np.array(s) for s in series]) if lengths.sum() else np.empty(0)
-    r = Ragged(np.zeros(int(lengths.sum()), dtype=np.int64), lengths)
-    ws = LagWorkspace(r, nlag)
-    st_out = ws.stats(flat, ("raw", "cen", "diffsq", "headssq", "ssq"))
-    for i, s in enumerate(series):
-        x = np.array(s)
-        mean = x.mean() if len(x) else 0.0
-        assert abs(st_out["mean"][i] - mean) < 1e-9
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.lists(st.integers(0, 4), min_size=0, max_size=12),
+                min_size=1, max_size=8),
+       st.integers(1, 14))
+def test_lag_sums_matches_naive(rows, nlag):
+    """Every lag term vs per-row loops, on empty rows and nlag ≥ row length:
+    two property series of the tokens, both cross orders, and a matrix."""
+    rng = np.random.RandomState(3)
+    T = rng.uniform(-3, 3, size=(2, 5))
+    M = rng.uniform(-3, 3, size=(5, 5))
+    r = _ragged(rows)
+    xs = T[:, r.flat]
+    got = lag_sums(r, nlag, xs=xs,
+                   terms=("prod", "cprod", "sqdiff", "headsq", "ssq"),
+                   cross=[(0, 1), (1, 0)], mats=[M])
+    den = lag_den(r, nlag)
+    for i, row in enumerate(rows):
+        N = len(row)
+        x = [T[p][row] for p in range(2)]
+        m = [v.mean() if N else 0.0 for v in x]
+        for p in range(2):
+            assert abs(got["ssq"][p, i] - sum((v - m[p]) ** 2 for v in x[p])) < 1e-9
         for d in range(1, nlag + 1):
-            pairs = [(x[j], x[j + d]) for j in range(len(x) - d)]
-            denom = max(len(x) - d, 1)
-            raw = sum(a * b for a, b in pairs) / denom
-            cen = sum((a - mean) * (b - mean) for a, b in pairs) / denom
-            diffsq = sum((a - b) ** 2 for a, b in pairs)
-            headssq = sum((a - mean) ** 2 for a, _ in pairs)
-            assert abs(st_out["raw"][i, d - 1] - raw) < 1e-9
-            assert abs(st_out["cen"][i, d - 1] - cen) < 1e-9
-            assert abs(st_out["diffsq"][i, d - 1] - diffsq) < 1e-9
-            assert abs(st_out["headssq"][i, d - 1] - headssq) < 1e-9
+            js = range(N - d)
+            assert den[i, d - 1] == max(N - d, 1)
+            for p in range(2):
+                a, c = x[p], m[p]
+                exp = {
+                    "prod": sum(a[j] * a[j + d] for j in js),
+                    "cprod": sum((a[j] - c) * (a[j + d] - c) for j in js),
+                    "sqdiff": sum((a[j] - a[j + d]) ** 2 for j in js),
+                    "headsq": sum((a[j] - c) ** 2 for j in js),
+                }
+                for t, e in exp.items():
+                    assert abs(got[t][p, i, d - 1] - e) < 1e-9, (t, p, row, d)
+            for ci, (pa, pb) in enumerate([(0, 1), (1, 0)]):
+                e = sum((x[pa][j] - m[pa]) * (x[pb][j + d] - m[pb]) for j in js)
+                assert abs(got["cross"][ci, i, d - 1] - e) < 1e-9, (pa, pb, row, d)
+            e = sum(M[row[j], row[j + d]] for j in js)
+            assert abs(got["mat"][0, i, d - 1] - e) < 1e-9, (row, d)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(0, 8).flatmap(
+    lambda L: st.lists(st.lists(st.integers(0, 4), min_size=L, max_size=L),
+                       min_size=1, max_size=6)),
+       st.integers(1, 4))
+def test_positional_gram_ids_matches_naive(rows, k):
+    """Token 4 is the DNA gap: a gram holding it is not ok."""
+    m = np.array(rows, dtype=np.int64).reshape(len(rows), -1)
+    L = m.shape[1]
+    ids, ok = positional_gram_ids(m, 4, k)
+    assert ids.shape == ok.shape == (len(rows), max(L - k + 1, 0))
+    for i, row in enumerate(rows):
+        for j in range(L - k + 1):
+            gram = row[j:j + k]
+            assert ok[i, j] == all(t < 4 for t in gram), (row, j, k)
+            if ok[i, j]:
+                g = 0
+                for t in gram:
+                    g = g * 4 + t
+                assert ids[i, j] == g, (row, j, k)
 
 
 eq_batches = st.integers(2, 20).flatmap(

@@ -51,23 +51,60 @@ def test_vectorized_shingler_matches_python(spark):
             assert len(np.unique(got)) == len(got)  # per-row set semantics
 
 
-def test_broadcast_and_instance_plans_identical(spark, corpus, monkeypatch):
+@pytest.fixture(scope="module")
+def boundary_corpus(spark):
+    """Every doc holds 12 distinct word trigrams; docs 2i and 2i+1 share a
+    6-word run, i.e. 4 trigrams, so their jaccard is 4/(12+12−4) = 0.2
+    exactly — the pairs sit ON a 0.2 threshold."""
+    rows = []
+    for i in range(8):
+        head = [f"s{i}x{j}" for j in range(6)]
+        rows.append((2 * i, " ".join(head + [f"a{i}x{j}" for j in range(8)])))
+        rows.append((2 * i + 1, " ".join(head + [f"b{i}x{j}" for j in range(8)])))
+    return spark.createDataFrame(rows, "doc_id long, text string").cache()
+
+
+def test_broadcast_and_instance_plans_identical(spark, corpus, boundary_corpus,
+                                                monkeypatch):
     from ifeatureomega_cli_spark.operators import dedup as D
 
-    def run():
-        return (D.ngram_jaccard_pairs(corpus, shingle_n=3, threshold=0.3)
+    def run(df, t):
+        return (D.ngram_jaccard_pairs(df, shingle_n=3, threshold=t)
                 .select("id_a", "id_b", F.round("jaccard", 6).alias("j"))
                 .sort("id_a", "id_b").collect())
 
-    bcast = run()                       # default: broadcast kernel
-    monkeypatch.setattr(D, "_NGRAM_BCAST_MAX_DOCS", 0)
-    inst = run()                        # forced: distributed instance plan
-    legacy = (D._ngram_jaccard_pairs_strjoin(
-        corpus, "text", "doc_id", 3, 0.3, 200, True)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("j"))
-        .sort("id_a", "id_b").collect())
-    assert len(bcast) > 0
-    assert bcast == inst == legacy
+    cap = D._NGRAM_BCAST_MAX_DOCS
+    for df, t in ((corpus, 0.3), (boundary_corpus, 0.2)):
+        monkeypatch.setattr(D, "_NGRAM_BCAST_MAX_DOCS", cap)
+        bcast = run(df, t)                  # default: broadcast kernel
+        monkeypatch.setattr(D, "_NGRAM_BCAST_MAX_DOCS", 0)
+        inst = run(df, t)                   # forced: distributed instance plan
+        legacy = (D._ngram_jaccard_pairs_strjoin(
+            df, "text", "doc_id", 3, t, 200, True)
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("j"))
+            .sort("id_a", "id_b").collect())
+        assert len(bcast) > 0
+        assert bcast == inst == legacy, t
+    assert [(r.id_a, r.id_b, r.j) for r in bcast] == [
+        (2 * i, 2 * i + 1, 0.2) for i in range(8)]
+
+
+def test_min_shared_bound_is_exact():
+    """The instance plan's n_inter pre-filter is the least integer k whose
+    k / (2n − k) passes the final double filter, on the whole grid
+    t = 0.01…0.99, n = 1…199 (the rounded-float closed form overshoots on
+    115 of these points)."""
+    from ifeatureomega_cli_spark.operators.dedup import _min_shared
+
+    for ti in range(1, 100):
+        t = ti / 100
+        for n in range(1, 200):
+            k = _min_shared(t, n)
+            assert 1 <= k <= n, (t, n, k)
+            assert k / (2 * n - k) >= t, (t, n, k)   # two min-size docs pass
+            assert all(j / (2 * n - j) < t for j in range(1, k)), (t, n, k)
+    assert _min_shared(0.2, 12) == 4
+    assert _min_shared(0.5, 0) == 1   # no shingles anywhere: trivial bound
 
 
 def test_instance_plan_unpacked_ids(spark, corpus, monkeypatch):
